@@ -320,54 +320,6 @@ def merge_counts(
     )
 
 
-def merge_upsert_write(
-    target_path: str,
-    source: DataFrame,
-    key: str | Sequence[str],
-    *,
-    update_columns: Sequence[str] | None = None,
-    schema_evolution: bool = False,
-    delete_when=None,
-    vacuum_keep_last: int | None = 2,
-) -> int:
-    """Parquet-table MERGE with a versioned pointer-file commit.
-
-    Reads the live version of the target table, merges, writes the
-    result as a brand-new immutable version directory, and swaps the
-    ``_CURRENT`` pointer last — the same only-commit-after-success
-    ordering the reference enforces by task dependencies (T4,
-    embeddings-pipeline.py:480), made crash-safe: dying anywhere before
-    the pointer swap leaves the previous version live and readable (no
-    rename window with zero live targets).  A plain parquet directory
-    is adopted as the implicit version 0 on first merge.  Returns the
-    committed version number.  On Delta/Iceberg this whole function is
-    `MERGE INTO` (the versioned table rejects non-local URIs and says
-    so).  ``vacuum_keep_last=None`` keeps every version (time travel).
-    """
-    from ..sources.versioned import VersionedParquetTable
-
-    spark = source.sparkSession
-    table = VersionedParquetTable(target_path)
-    target = table.read(spark)
-    merged = merge_upsert(
-        target, source, key,
-        update_columns=update_columns, schema_evolution=schema_evolution,
-        delete_when=delete_when,
-    )
-    version = table.commit(merged)
-    if vacuum_keep_last is not None:
-        # ride-along vacuum is BEST-EFFORT under writer
-        # contention: its destructive sweep takes the commit
-        # lock, and a merge that just committed must not fail
-        # because a racing writer holds it — the next ride
-        # vacuums instead
-        try:
-            table.vacuum(keep_last=vacuum_keep_last)
-        except ConcurrentCommitError:
-            pass
-    return version
-
-
 def merge_upsert_write_pruned(
     target_path: str,
     source: DataFrame,
@@ -494,10 +446,10 @@ def _pruned_merge_attempt(
     This is the property the reference's Snowflake MERGE has natively —
     micro-partition pruning (embeddings-pipeline.py:294-352 touches
     only partitions holding matched ``main_refco`` values) — and the
-    one thing the full-rewrite :func:`merge_upsert_write` lacks at
-    100 TB: a daily incremental batch against a 100 TB target must not
-    rewrite 100 TB.  Delta/Iceberg MERGE INTO does exactly this file
-    skipping from its stats log; this is the local-manifest
+    one thing a full-rewrite MERGE (``table.commit(merge_upsert(...))``)
+    lacks at 100 TB: a daily incremental batch against a 100 TB target
+    must not rewrite 100 TB.  Delta/Iceberg MERGE INTO does exactly
+    this file skipping from its stats log; this is the local-manifest
     implementation of the same plan.
 
     Mechanics:
@@ -539,10 +491,10 @@ def _pruned_merge_attempt(
     merge_upsert(full target, source) row-for-row — the unit suite
     asserts this equality and the untouched files' byte identity.
 
-    Legacy pointer-less directories are ADOPTED first (one full
-    clustered rewrite — unavoidable: legacy files can't be referenced
-    by a version manifest), so the first pruned merge on a legacy
-    table costs one rewrite and every later one prunes.
+    Legacy pointer-less directories and plain (manifest-less) versions
+    are ADOPTED first (one full clustered rewrite that creates the
+    manifest layout), so the first pruned merge on such a table costs
+    one rewrite and every later one prunes.
 
     COMPOSITE keys (a sequence of column names) merge on the full key
     and prune on EVERY key column: files cluster on the LEADING column
@@ -562,7 +514,6 @@ def _pruned_merge_attempt(
     on every tier.
     """
     from ..sources.versioned import (
-        SnapshotConflictError,
         VersionedParquetTable,
         _stat_canon,
         _stat_restore,
@@ -574,30 +525,30 @@ def _pruned_merge_attempt(
     lead = keys[0]  # clustering column; extras prune via recorded stats
     trail = tuple(keys[1:])
 
-    if table.current_version() is None:
-        # adopt: one clustered full rewrite creates the manifest layout
+    # the snapshot this whole computation is valid against; the commit
+    # below CASes on it (see merge_upsert_write_pruned's retry loop).
+    # ONE prior-manifest read serves the stats-name mapping here, the
+    # app-metadata carry-over, and the constraint inheritance at commit.
+    # RAW doc only: every field the merge needs from the prior
+    # manifest (schema, key, mapping, constraints, app metadata) is
+    # inline in both storage forms — the full file list materializes
+    # below via file_entries, or NOT AT ALL on a segmented manifest
+    # whose envelopes prune the candidate segments (the exact tier)
+    base_version = table.current_version()
+    prior_man = (
+        table._raw_manifest(base_version) if base_version is not None else None
+    )
+    if prior_man is None:
+        # adopt a legacy directory or a plain (manifest-less) version:
+        # one clustered full rewrite creates the manifest layout
         table.commit_with_manifest(
             table.read(spark),
             lead,
             stats_columns=keys if trail else None,
             key_columns=keys,
         )
-
-    # the snapshot this whole computation is valid against; the commit
-    # below CASes on it (see merge_upsert_write_pruned's retry loop).
-    # ONE prior-manifest read serves the stats-name mapping here, the
-    # app-metadata carry-over, and the constraint inheritance at commit.
-    base_version = table.current_version()
-    # RAW doc only: every field the merge needs from the prior
-    # manifest (schema, key, mapping, constraints, app metadata) is
-    # inline in both storage forms — the full file list materializes
-    # below via file_entries, or NOT AT ALL on a segmented manifest
-    # whose envelopes prune the candidate segments (the exact tier)
-    prior_man = (
-        table._raw_manifest(base_version)
-        if base_version is not None
-        else None
-    ) or {}
+        base_version = table.current_version()
+        prior_man = table._raw_manifest(base_version)
     # manifest per-file stats are keyed PHYSICALLY (column mapping);
     # the caller's keys are logical
     _cmap = {
@@ -606,17 +557,20 @@ def _pruned_merge_attempt(
         )
         for f in (prior_man.get("schema") or {}).get("fields", [])
     }
-    # segmented fast path: eligible when the manifest's recorded
-    # stats serve these keys directly (the same condition under which
-    # file_entries would return the manifest list verbatim) — the
-    # touched-test then evaluates segment ENVELOPES first and only
-    # the candidate segments materialize
+    # the manifest's recorded stats serve these keys directly when it
+    # is keyed on the lead column and records every trailing column
+    # (file_entries then returns the manifest list verbatim; otherwise
+    # it re-scans footer stats, and the commit re-states the carried
+    # entries).  Verbatim + segmented is the fast path: the
+    # touched-test evaluates segment ENVELOPES first and only the
+    # candidate segments materialize
     _p_lead = _cmap.get(lead, lead)
     _p_trail = {_cmap.get(c, c) for c in trail}
-    seg_fast = (
-        ("file_segments" in prior_man or "seg_ref_lists" in prior_man)
-        and prior_man.get("key") == _p_lead
-        and _p_trail <= set(prior_man.get("stats_columns", [_p_lead]))
+    verbatim = prior_man.get("key") == _p_lead and _p_trail <= set(
+        prior_man.get("stats_columns", [_p_lead])
+    )
+    seg_fast = verbatim and (
+        "file_segments" in prior_man or "seg_ref_lists" in prior_man
     )
     if seg_fast:
         from pyspark.sql.types import StructType as _ST
@@ -889,23 +843,26 @@ def _pruned_merge_attempt(
             base_version, lambda env: touched(0, env)
         )["files"]
     touched_entries = [e for i, e in enumerate(entries) if touched(i, e)]
+    touched_map = {e["path"]: e for e in touched_entries}
+    # carried = "everything else in the base version", BY REFERENCE
+    # (the commit edits the base list); on the segmented path it is
+    # never built, and telemetry comes from the segment refs' sums
     if seg_fast:
-        # carried = "everything else in the base version", BY
-        # REFERENCE — never built as a list; telemetry comes from the
-        # segment refs' aggregate sums
         tot = table._segment_totals(base_version) or {}
         files_total = tot.get("n_files", len(entries))
         bytes_total = tot.get("bytes", 0)
-        carried = None
-        n_carried = files_total - len(touched_entries)
-        bytes_carried = bytes_total - sum(
-            e["bytes"] for e in touched_entries
-        )
     else:
-        carried = [e for i, e in enumerate(entries) if not touched(i, e)]
         files_total = len(entries)
-        n_carried = len(carried)
-        bytes_carried = sum(e["bytes"] for e in carried)
+        bytes_total = sum(e["bytes"] for e in entries)
+    n_carried = files_total - len(touched_entries)
+    bytes_carried = bytes_total - sum(e["bytes"] for e in touched_entries)
+    # re-scanned entries the commit must re-state: their stats cover
+    # the merge keys, the base manifest's do not
+    restated = (
+        {}
+        if verbatim
+        else {e["path"]: e for e in entries if e["path"] not in touched_map}
+    )
 
     # Logical-rebase scope for the commit's CAS (Delta conflict
     # scoping): if a racing commit wins the pointer but provably
@@ -916,10 +873,10 @@ def _pruned_merge_attempt(
     # evaluated per racing entry driver-side; the range-join tier has
     # no collected keys, so its test is the batch form — one bounded
     # broadcast range join of the racing entries against the distinct
-    # source keys.
+    # source keys.  Re-stated entries count as touched: a racing edit
+    # of one must not be overwritten by its stale re-scan.
     rebase_scope = {
-        "touched": {e["path"] for e in touched_entries},
-        "exclude": {e["path"] for e in touched_entries},
+        "touched": set(touched_map) | set(restated),
         "might_touch": (
             (lambda e: touched(0, e)) if pruning == "exact" else None
         ),
@@ -953,7 +910,7 @@ def _pruned_merge_attempt(
                     source,
                     keys,
                     touched_entries,
-                    carried,
+                    restated,
                     totals={
                         "files_total": files_total,
                         "bytes_carried": bytes_carried,
@@ -968,9 +925,7 @@ def _pruned_merge_attempt(
                     max_dv_rows=max_dv_rows,
                     n_src=n_src,
                     pruning=pruning,
-                    # MoR keeps the touched entries carried (DV re-point),
-                    # so a rebased inline carried set must NOT exclude them
-                    rebase_scope={**rebase_scope, "exclude": ()},
+                    rebase_scope=rebase_scope,
                 )
                 if mor is not None:
                     return mor
@@ -979,13 +934,10 @@ def _pruned_merge_attempt(
         # ---- merge only the touched subset (step 4) — read through the
         # manifest mapping (files store PHYSICAL names; the merge, like
         # every public surface, speaks logical)
-        if touched_entries and prior_man:
+        if touched_entries:
             subset = table._read_manifest_files(
                 spark, prior_man, touched_entries
             )
-        elif touched_entries:
-            paths = [os.path.join(table.root, e["path"]) for e in touched_entries]
-            subset = spark.read.schema(schema).parquet(*paths)
         else:
             subset = spark.createDataFrame([], schema)
         # decompose: the batch is by construction small relative to the
@@ -1053,118 +1005,33 @@ def _pruned_merge_attempt(
             )
             for lo, hi in bands
         ]
-        # app metadata: prior keys persist until overwritten (Delta txn
-        # analog) — merged with this commit's, new keys winning
-        prior_meta = dict(prior_man.get("app_metadata") or {})
-        common = dict(
-            app_metadata={**prior_meta, **(app_metadata or {})} or None,
-            expected_base_version=base_version,
+        # the touched files' rows live on in the rewritten output, so
+        # their entries are excluded outright
+        version, bytes_rewritten = _publish_merge(
+            table,
+            merged,
+            lead,
+            prior_man,
+            cluster_partitions=max(1, len(touched_entries)),
+            append_split=split,
+            band_rows_hint=band_rows if split is not None else None,
+            stats_columns=keys if trail else None,
+            key_columns=keys,
+            base_version=base_version,
+            carried_exclude=touched_map,
+            carried_touched=restated,
+            rebase_scope=rebase_scope,
+            publish_mode=publish_mode,
+            app_metadata=app_metadata,
             operation="MERGE",
-            rebase_on_conflict=rebase_scope,
+            vacuum_keep_last=vacuum_keep_last,
         )
-        if publish_mode == "prepared":
-            # PREPARE/PUBLISH split: every Spark job the commit needs
-            # — the merged-subset write, footer stats, blooms,
-            # constraint check — runs here, OUTSIDE the commit lock,
-            # into a content-addressed staging dir.  N racing writers'
-            # data jobs therefore run in PARALLEL; the lock hold below
-            # covers only conflict analysis (CAS / logical rebase) and
-            # the manifest/marker/pointer publish (driver metadata,
-            # O(touched)).  Without the split, racing writers' walls
-            # summed their write jobs even when every conflict rebased
-            # (measured 71.5 → 52.6 s at 8 banded writers).
-            #
-            # Advisory conflict probe FIRST: if the snapshot is
-            # already stale and provably un-rebasable, recompute now —
-            # preparing would stage a write the publish must discard.
-            # The authoritative check still runs under the lock (a
-            # racer can land during the prepare); this probe only
-            # bounds the waste window to the prepare itself.
-            cur_now = table.current_version()
-            if cur_now != base_version and not table._rebase_compatible(
-                base_version,
-                cur_now,
-                rebase_scope["touched"],
-                rebase_scope["might_touch"],
-                rebase_scope["might_touch_batch"],
-            ):
-                raise SnapshotConflictError(base_version, cur_now)
-            prepared = table.prepare_commit(
-                merged,
-                lead,
-                base_version=base_version,
-                cluster_partitions=max(1, len(touched_entries)),
-                append_split=split,
-                band_rows_hint=band_rows if split is not None else None,
-                stats_columns=keys if trail else None,
-                key_columns=keys,
-                constraints=prior_man.get("constraints") or {},
-                column_mapping=prior_man.get("column_mapping") or {},
-                retired_physical=prior_man.get("retired_physical") or [],
-                bloom_columns=prior_man.get("bloom_columns") or [],
-            )
-            common["prepared"] = prepared
-            commit_df = None
-            new_bytes = prepared["new_bytes"]
-        else:
-            # inline (pessimistic) publish — the conflict-retry shape:
-            # the CAS under the lock aborts BEFORE the write job, so a
-            # storm of genuinely-overlapping writers never stages
-            # writes it must throw away (the pre-split behavior;
-            # measured 237 → 307 s regression on the scattered stress
-            # when retries stayed optimistic)
-            common.update(
-                cluster_partitions=max(1, len(touched_entries)),
-                append_split=split,
-                band_rows_hint=band_rows if split is not None else None,
-                stats_columns=keys if trail else None,
-                key_columns=keys,
-                constraints=prior_man.get("constraints") or {},
-                column_mapping=prior_man.get("column_mapping") or {},
-                retired_physical=prior_man.get("retired_physical") or [],
-                bloom_columns=prior_man.get("bloom_columns") or [],
-            )
-            commit_df = merged
-            new_bytes = None
-        if carried is None:
-            # segmented: the base version's untouched entries carry by
-            # reference inside their segments; the touched files' rows
-            # live on in the rewritten output, so their entries are
-            # excluded outright
-            version = table.commit_with_manifest(
-                commit_df,
-                lead,
-                carried_base_version=base_version,
-                carried_exclude={e["path"]: e for e in touched_entries},
-                **common,
-            )
-        else:
-            version = table.commit_with_manifest(
-                commit_df, lead, carried=carried, **common
-            )
-        if vacuum_keep_last is not None:
-            # ride-along vacuum is BEST-EFFORT under writer
-            # contention: its destructive sweep takes the commit
-            # lock, and a merge that just committed must not fail
-            # because a racing writer holds it — the next ride
-            # vacuums instead
-            try:
-                table.vacuum(keep_last=vacuum_keep_last)
-            except ConcurrentCommitError:
-                pass
         return {
             "version": version,
             "files_total": files_total,
             "files_touched": len(touched_entries),
             "files_carried": n_carried,
-            # the commit's own new data files: the prepare's footer
-            # stats (staged placement) or the version dir's files
-            # (inline retries) — never a full-manifest materialization
-            "bytes_rewritten": (
-                new_bytes
-                if new_bytes is not None
-                else _vdir_data_bytes(table, version)
-            ),
+            "bytes_rewritten": bytes_rewritten,
             "bytes_carried": bytes_carried,
             "rows_source": n_src,
             "pruning": pruning,
@@ -1176,17 +1043,103 @@ def _pruned_merge_attempt(
             src_keys.unpersist()
 
 
-def _vdir_data_bytes(table, version: int) -> int:
-    """Bytes of the DATA files a version's own directory holds — the
-    commit's rewritten/appended mass, read from the filesystem so
-    telemetry never materializes a full manifest (sidecars and
-    segments excluded by the same prefix rule as scan_file_stats)."""
+def _publish_merge(
+    table,
+    df: DataFrame,
+    lead: str,
+    prior_man: dict,
+    *,
+    base_version: int,
+    rebase_scope: dict,
+    publish_mode: str,
+    app_metadata,
+    operation: str,
+    vacuum_keep_last,
+    carried_exclude: dict | None = None,
+    carried_touched: dict | None = None,
+    **layout,
+) -> tuple[int, int]:
+    """The ONE publish both pruned-merge plans share: commit ``df`` as
+    an edit of ``base_version``'s file list (``carried_exclude`` /
+    ``carried_touched``) with CAS + logical rebase on ``rebase_scope``,
+    then the ride-along vacuum.  ``layout`` holds the per-write
+    arguments; the table's inherited metadata comes from ``prior_man``.
+
+    ``publish_mode="prepared"`` runs the write phase lock-free
+    (``prepare_commit``) so racing writers' data jobs overlap (measured
+    71.5 → 52.6 s at 8 banded writers), after an advisory staleness
+    probe: a snapshot already stale and provably un-rebasable
+    recomputes now instead of staging a write the publish must discard
+    (the authoritative check still runs under the lock).
+    ``"inline"`` — the conflict-retry / storm shape — writes under the
+    lock, where the CAS aborts BEFORE the write job, so a storm of
+    genuinely-overlapping writers never stages writes it must throw
+    away (measured 237 → 307 s on the scattered stress when retries
+    stayed optimistic).
+
+    Returns ``(version, bytes_rewritten)``: the bytes of the commit's
+    own new data files, never a full-manifest materialization."""
+    from ..sources.versioned import SnapshotConflictError
+
+    layout.update(
+        constraints=prior_man.get("constraints") or {},
+        column_mapping=prior_man.get("column_mapping") or {},
+        retired_physical=prior_man.get("retired_physical") or [],
+        bloom_columns=prior_man.get("bloom_columns") or [],
+    )
+    prepared = None
+    if publish_mode == "prepared":
+        cur_now = table.current_version()
+        if cur_now != base_version and not table._rebase_compatible(
+            base_version,
+            cur_now,
+            rebase_scope["touched"],
+            rebase_scope["might_touch"],
+            rebase_scope["might_touch_batch"],
+        ):
+            raise SnapshotConflictError(base_version, cur_now)
+        prepared = table.prepare_commit(
+            df,
+            lead,
+            base_version=base_version,
+            dv_touched=carried_touched,
+            **layout,
+        )
+    # app metadata: prior keys persist until overwritten (Delta txn
+    # analog) — merged with this commit's, new keys winning
+    prior_meta = dict(prior_man.get("app_metadata") or {})
+    version = table.commit_with_manifest(
+        None if prepared else df,
+        lead,
+        prepared=prepared,
+        carried_base_version=base_version,
+        carried_exclude=carried_exclude,
+        carried_touched=carried_touched,
+        expected_base_version=base_version,
+        app_metadata={**prior_meta, **(app_metadata or {})} or None,
+        operation=operation,
+        rebase_on_conflict=rebase_scope,
+        **({} if prepared else layout),
+    )
+    if vacuum_keep_last is not None:
+        # ride-along vacuum is BEST-EFFORT under writer contention:
+        # its destructive sweep takes the commit lock, and a merge
+        # that just committed must not fail because a racing writer
+        # holds it — the next ride vacuums instead
+        try:
+            table.vacuum(keep_last=vacuum_keep_last)
+        except ConcurrentCommitError:
+            pass
+    if prepared is not None:
+        return version, prepared["new_bytes"]
+    # inline: the data files in the version's own directory (sidecars
+    # and segments excluded by the same prefix rule as scan_file_stats)
     vdir = table._version_dir(version)
     try:
         names = os.listdir(vdir)
     except OSError:
-        return 0
-    return sum(
+        names = []
+    return version, sum(
         os.path.getsize(os.path.join(vdir, fn))
         for fn in names
         if fn.endswith(".parquet")
@@ -1200,7 +1153,7 @@ def _mor_merge_attempt(
     source: DataFrame,
     keys: list[str],
     touched_entries: list[dict],
-    carried: list[dict] | None,
+    restated: dict,
     *,
     totals: dict,
     base_version: int,
@@ -1213,8 +1166,7 @@ def _mor_merge_attempt(
     max_dv_rows: int,
     n_src: int,
     pruning: str,
-    rebase_scope: dict | None = None,
-    publish_mode: str = "prepared",
+    rebase_scope: dict,
 ) -> dict | None:
     """The merge-on-read write plan for :func:`_pruned_merge_attempt`
     (Delta deletion-vectors MERGE analog).  Semantics are IDENTICAL to
@@ -1262,183 +1214,79 @@ def _mor_merge_attempt(
     # the sidecar executor-side — positions never cross the driver
     matched.persist()
     try:
-        return _mor_commit(
-            table, prior_man, source, keys, matched,
-            touched_entries=touched_entries, carried=carried,
-            totals=totals,
-            base_version=base_version, update_columns=update_columns,
-            schema_evolution=schema_evolution, delete_when=delete_when,
-            evolution_exclude=evolution_exclude,
-            app_metadata=app_metadata,
-            vacuum_keep_last=vacuum_keep_last,
-            max_dv_rows=max_dv_rows, n_src=n_src, pruning=pruning,
-            subset_pos=subset_pos, sk=sk, rebase_scope=rebase_scope,
-            publish_mode=publish_mode,
+        # _dv_plan only needs the TOUCHED entries' prior DV rows
+        # (matched paths are a subset of them) — never the file list
+        n_dv, n_dv_files, dv_kw = table._dv_plan(
+            {**prior_man, "files": touched_entries}, matched
         )
+        if n_dv > max_dv_rows:
+            return None  # rewrite-scale update: copy-on-write is the plan
+
+        subset = subset_pos.drop("__file", "__pos")
+        appended = merge_upsert(
+            subset,
+            source,
+            keys,
+            update_columns=update_columns,
+            schema_evolution=schema_evolution,
+            delete_when=delete_when,
+            evolution_exclude=evolution_exclude,
+            strategy="decompose",
+        ).join(sk, on=list(keys), how="left_semi")
+
+        # NO band-split here, deliberately: copy-on-write bands exist so
+        # a TABLE-scale rewrite never mints a gap-spanning file (such a
+        # file would inflate every later merge's touched set by its
+        # mass).  MoR appends are BATCH-scale by construction — a
+        # scattered batch's single appended file may span many bands,
+        # but reading it costs O(batch), and maintain()'s
+        # compact/recluster folds the accumulation.  Banding a 2k-row
+        # append into 32 per-band files costs 32 write jobs and 32
+        # mini-files per commit (measured in
+        # tools/stress_dv_amplification.py before this choice).
+        #
+        # The touched entries stay carried, re-pointed at the new DV
+        # sidecar.  Merge-on-read always prepares lock-free: the retry
+        # loop's inline mode applies to the copy-on-write plan.
+        version, bytes_rewritten = _publish_merge(
+            table,
+            appended,
+            keys[0],
+            prior_man,
+            cluster_partitions=max(1, -(-n_src // 2_000_000)),
+            stats_columns=keys if len(keys) > 1 else None,
+            key_columns=keys,
+            **(dv_kw if n_dv else {}),
+            base_version=base_version,
+            carried_touched={
+                **restated,
+                **{e["path"]: e for e in touched_entries},
+            },
+            rebase_scope=rebase_scope,
+            publish_mode="prepared",
+            app_metadata=app_metadata,
+            operation="MERGE[mor]",
+            vacuum_keep_last=vacuum_keep_last,
+        )
+        return {
+            "version": version,
+            "files_total": totals["files_total"],
+            "files_touched": len(touched_entries),
+            "files_carried": totals["files_total"] - len(touched_entries),
+            "bytes_rewritten": bytes_rewritten,
+            "bytes_carried": totals["bytes_carried"],
+            "rows_source": n_src,
+            "pruning": pruning,
+            "write_mode": "mor",
+            "dv_rows_added": int(n_dv),
+            "dv_files": int(n_dv_files),
+            "rebased": table._last_commit_rebase is not None,
+        }
     finally:
         # unpersist on EVERY exit — a SnapshotConflictError retry or
         # any mid-commit failure must not leak the cached (file, pos)
         # set into executor storage for the session's lifetime
         matched.unpersist()
-
-
-def _mor_commit(
-    table,
-    prior_man: dict,
-    source: DataFrame,
-    keys: list[str],
-    matched: DataFrame,
-    *,
-    touched_entries,
-    carried,
-    totals,
-    base_version,
-    update_columns,
-    schema_evolution,
-    delete_when,
-    evolution_exclude,
-    app_metadata,
-    vacuum_keep_last,
-    max_dv_rows,
-    n_src,
-    pruning,
-    subset_pos,
-    sk,
-    rebase_scope=None,
-    publish_mode="prepared",
-) -> dict | None:
-    # _dv_plan only needs the TOUCHED entries' prior DV rows (matched
-    # paths are a subset of them) — never the full file list
-    n_dv, n_dv_files, dv_kw = table._dv_plan(
-        {**prior_man, "files": touched_entries}, matched
-    )
-    if n_dv > max_dv_rows:
-        return None  # rewrite-scale update: copy-on-write is the plan
-
-    subset = subset_pos.drop("__file", "__pos")
-    appended = merge_upsert(
-        subset,
-        source,
-        keys,
-        update_columns=update_columns,
-        schema_evolution=schema_evolution,
-        delete_when=delete_when,
-        evolution_exclude=evolution_exclude,
-        strategy="decompose",
-    ).join(sk, on=list(keys), how="left_semi")
-
-    # NO band-split here, deliberately: copy-on-write bands exist so a
-    # TABLE-scale rewrite never mints a gap-spanning file (such a file
-    # would inflate every later merge's touched set by its mass).  MoR
-    # appends are BATCH-scale by construction — a scattered batch's
-    # single appended file may span many bands, but reading it costs
-    # O(batch), and maintain()'s compact/recluster folds the
-    # accumulation.  Banding a 2k-row append into 32 per-band files
-    # costs 32 write jobs and 32 mini-files per commit (measured in
-    # tools/stress_dv_amplification.py before this choice).
-    lead = keys[0]
-    prior_meta = dict(prior_man.get("app_metadata") or {})
-    common = dict(
-        app_metadata={**prior_meta, **(app_metadata or {})} or None,
-        expected_base_version=base_version,
-        operation="MERGE[mor]",
-        rebase_on_conflict=rebase_scope,
-    )
-    inherited = dict(
-        cluster_partitions=max(1, -(-n_src // 2_000_000)),
-        stats_columns=keys if len(keys) > 1 else None,
-        key_columns=keys,
-        constraints=prior_man.get("constraints") or {},
-        column_mapping=prior_man.get("column_mapping") or {},
-        retired_physical=prior_man.get("retired_physical") or [],
-        bloom_columns=prior_man.get("bloom_columns") or [],
-    )
-    if publish_mode == "prepared":
-        # prepare/publish split, MoR form: the appended-image write
-        # AND the DV sidecar job both run here, outside the lock (the
-        # sidecar depends only on the touched entries' prior DVs,
-        # which a rebase proves identical between base and head).
-        # Advisory staleness probe first — see the CoW path.
-        from ..sources.versioned import SnapshotConflictError
-
-        cur_now = table.current_version()
-        if cur_now != base_version and not table._rebase_compatible(
-            base_version,
-            cur_now,
-            set(rebase_scope["touched"]) if rebase_scope else set(),
-            (rebase_scope or {}).get("might_touch"),
-            (rebase_scope or {}).get("might_touch_batch"),
-        ):
-            raise SnapshotConflictError(base_version, cur_now)
-        prepared = table.prepare_commit(
-            appended,
-            lead,
-            base_version=base_version,
-            **inherited,
-            **(
-                dict(
-                    dv_touched={e["path"]: e for e in touched_entries},
-                    **dv_kw,
-                )
-                if n_dv
-                else {}
-            ),
-        )
-        common["prepared"] = prepared
-        commit_df = None
-        new_bytes = prepared["new_bytes"]
-    else:
-        common.update(inherited)
-        if n_dv:
-            common.update(dv_kw)
-        commit_df = appended
-        new_bytes = None
-    if carried is None:
-        # segmented: untouched entries carry inside their segments by
-        # reference; touched entries (re-pointed at the new DV
-        # sidecar) are the only base entries the commit materializes
-        version = table.commit_with_manifest(
-            commit_df,
-            lead,
-            carried_base_version=base_version,
-            carried_touched={e["path"]: e for e in touched_entries},
-            **common,
-        )
-    else:
-        version = table.commit_with_manifest(
-            commit_df,
-            lead,
-            carried=carried + touched_entries,
-            **common,
-        )
-    if vacuum_keep_last is not None:
-        # ride-along vacuum is BEST-EFFORT under writer
-        # contention: its destructive sweep takes the commit
-        # lock, and a merge that just committed must not fail
-        # because a racing writer holds it — the next ride
-        # vacuums instead
-        try:
-            table.vacuum(keep_last=vacuum_keep_last)
-        except ConcurrentCommitError:
-            pass
-    return {
-        "version": version,
-        "files_total": totals["files_total"],
-        "files_touched": len(touched_entries),
-        "files_carried": totals["files_total"] - len(touched_entries),
-        "bytes_rewritten": (
-            new_bytes
-            if new_bytes is not None
-            else _vdir_data_bytes(table, version)
-        ),
-        "bytes_carried": totals["bytes_carried"],
-        "rows_source": n_src,
-        "pruning": pruning,
-        "write_mode": "mor",
-        "dv_rows_added": int(n_dv),
-        "dv_files": int(n_dv_files),
-        "rebased": table._last_commit_rebase is not None,
-    }
 
 
 def apply_changes(

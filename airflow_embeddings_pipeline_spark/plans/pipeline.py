@@ -18,6 +18,8 @@ tests/test_pipeline.py).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -263,23 +265,26 @@ def _scratch_dir(root: str, sf_dir: str) -> str:
 # ------------------------------------------------- shared scratch seed
 # Ten of the versioned-lifecycle entries start from the IDENTICAL
 # initial commit — orders projected to (k, price, status), clustered on
-# k into 16 files, no stats columns.  r12 (the r11 verdict's deferred
-# item): that target is committed ONCE per (process, fixture-mtime)
-# into a template table, and each entry seeds its own scratch root with
-# ``clone_to`` — a hardlink-per-file, Spark-free metadata clone with an
-# independent lifecycle (either side's vacuum only unlinks its own
-# names; data files are immutable copy-on-write throughout the engine,
-# so sharing inodes is safe).  The cloned root is byte-identical in
-# content to a direct commit (same deterministic projection, same
-# clustering, version 1 either way); only data-file NAMES differ, which
-# nothing observable depends on.  The commit path itself is untouched —
-# this is a builder-side reuse of the existing (tested) clone
-# primitive.  Nothing survives the process: the template lives under a
-# pid-scoped scratch dir and is rebuilt from the parquet fixtures by
-# the first consumer of every run, and the memo key carries the fixture
-# file's mtime so a rewritten fixture invalidates it (the load_table
-# memo's contract).
+# k into 16 files, no stats columns.  That target is committed ONCE per
+# (process, fixture-mtime) into a template table, and each entry seeds
+# its own scratch root with ``clone_to`` — a hardlink-per-file,
+# Spark-free metadata clone with an independent lifecycle (either
+# side's vacuum only unlinks its own names; data files are immutable
+# copy-on-write throughout the engine, so sharing inodes is safe).  The
+# cloned root is observationally identical to a direct commit through
+# read, change feed and time travel (same deterministic projection,
+# same clustering, version 1 either way; tests/test_pipeline.py pins
+# it).  It is not identical through history(): the clone's v1 records
+# operation CLONE and a ``cloned_from`` app-metadata key, which no
+# registered query reads.  Nothing survives the process: the template
+# lives under a pid-scoped scratch dir and is rebuilt from the parquet
+# fixtures by the first consumer of every run, and the memo key carries
+# the fixture file's mtime so a rewritten fixture invalidates it (the
+# load_table memo's contract).  The check-then-build runs under a
+# module lock: a rebuild rmtree's the deterministic template path, so
+# two threads seeding at once would wipe each other's template.
 _ORDERS_KPS_TEMPLATES: dict[tuple, str] = {}
+_ORDERS_KPS_LOCK = threading.Lock()
 
 
 def _orders_kps_table(
@@ -309,17 +314,19 @@ def _orders_kps_table(
         )
         return table
     key = (os.path.abspath(sf_dir), mkey)
-    troot = _ORDERS_KPS_TEMPLATES.get(key)
-    if troot is None or not os.path.isdir(troot):
-        troot = _scratch_dir("/tmp/spark_graft_tmpl_orders_kps", sf_dir)
-        tmpl = VersionedParquetTable(troot)
-        tmpl.commit_with_manifest(target, "k", cluster_partitions=16)
-        _ORDERS_KPS_TEMPLATES[key] = troot
-    # set_cdc_watermark=False: a direct initial commit carries no CDC
-    # watermark metadata, and the clone must be indistinguishable
-    VersionedParquetTable(troot).clone_to(
-        dest_path, set_cdc_watermark=False, app_metadata=app_metadata
-    )
+    with _ORDERS_KPS_LOCK:
+        troot = _ORDERS_KPS_TEMPLATES.get(key)
+        if troot is None or not os.path.isdir(troot):
+            troot = _scratch_dir("/tmp/spark_graft_tmpl_orders_kps", sf_dir)
+            tmpl = VersionedParquetTable(troot)
+            tmpl.commit_with_manifest(target, "k", cluster_partitions=16)
+            _ORDERS_KPS_TEMPLATES[key] = troot
+        # set_cdc_watermark=False: a direct initial commit carries no
+        # CDC watermark metadata, and the clone must be observationally
+        # identical to it through read / CDF / time travel
+        VersionedParquetTable(troot).clone_to(
+            dest_path, set_cdc_watermark=False, app_metadata=app_metadata
+        )
     return VersionedParquetTable(dest_path)
 
 

@@ -913,6 +913,17 @@ class VersionedParquetTable:
       the rest forward at zero I/O — the micro-partition pruning the
       reference gets from Snowflake's MERGE, and what Delta/Iceberg do
       in their commit logs.
+
+    Every manifest commit is ONE write phase plus ONE publish.  The
+    write phase (:meth:`_write_phase`) runs every Spark job the commit
+    needs — clustered data write, footer stats, blooms, constraint
+    check, DV sidecar — and returns a token.  The publish
+    (:meth:`commit_with_manifest`) runs under the commit lock: CAS or
+    logical rebase, then manifest, ``_COMMITTED`` marker and pointer
+    swap.  :meth:`prepare_commit` runs the write phase lock-free into a
+    staging directory, so racing writers' data jobs overlap; an inline
+    ``commit_with_manifest(df, ...)`` runs it under the lock, after the
+    CAS, into the version directory.
     """
 
     # --- manifest segmentation thresholds (class attrs so tests can
@@ -1621,10 +1632,13 @@ class VersionedParquetTable:
         dirty_entries = list(exclude.values()) + [
             replaced[p] for p in replaced
         ]
+        # a re-keying commit's entries carry intervals of ANOTHER
+        # column than the base envelopes: no envelope can rule out
+        rekeyed = raw.get("key") != man.get("key")
 
         def _may_contain(ref: dict) -> bool:
             env = ref.get("env")
-            if env is None:
+            if env is None or rekeyed:
                 return True
             emin, emax = env.get("min"), env.get("max")
             if emin is None or emax is None:
@@ -3117,9 +3131,10 @@ class VersionedParquetTable:
         ``base_version``'s manifest: column mapping (renames/drops stay
         metadata-only — data files carry PHYSICAL names), inherited
         constraints / bloom columns / key identity, and the physically
-        re-aliased ``df``.  Shared by the locked inline commit and the
-        LOCK-FREE prepare phase: a prepared commit resolves against its
-        CAS snapshot, and that stays sound through a logical rebase
+        re-aliased ``df``.  The first step of :meth:`_write_phase`: a
+        prepared commit resolves against its CAS snapshot, an inline
+        one against the live head, and that stays sound through a
+        logical rebase
         because ``_REBASE_META_FIELDS`` (schema, mapping, constraints,
         blooms …) must be IDENTICAL between base and head for the
         rebase to publish at all.  ``version_hint`` only disambiguates
@@ -3230,8 +3245,7 @@ class VersionedParquetTable:
         """The commit's DATA-file write: range-clustered on ``key``
         (or ``cluster_by``), band-split per ``append_split`` so no
         output file's [min, max] spans a gap between touched key
-        regions.  Pure data placement — used inside the lock by the
-        inline commit and OUTSIDE any lock by :meth:`prepare_commit`
+        regions.  Pure data placement, run by :meth:`_write_phase`
         (the write's output is version-independent)."""
         from pyspark.sql import functions as F
 
@@ -3439,29 +3453,27 @@ class VersionedParquetTable:
         dv_delta_counts: dict | None = None,
         dv_touched: dict | None = None,
     ) -> dict:
-        """PREPARE phase of the prepare/publish commit split: run every
-        SPARK JOB a commit needs — the clustered data write, the
-        footer stats scan, the bloom build, the constraint check, and
-        (merge-on-read) the DV sidecar write —
-        into a content-addressed staging directory
-        (``_staged/p-<token>/``) UNDER NO LOCK, and return a prepared
-        token for ``commit_with_manifest(prepared=...)``.
+        """Run a commit's WRITE PHASE under no lock, into a
+        content-addressed staging directory (``_staged/p-<token>/``),
+        and return the prepared token for
+        ``commit_with_manifest(prepared=...)``.
 
-        This is what lets N racing writers' data jobs run in PARALLEL:
-        the commit lock then covers only conflict analysis (CAS /
-        logical rebase) and the manifest/marker/pointer publish —
-        driver-side metadata work in O(touched).  Without the split,
-        N writers' wall time is the SUM of their write jobs even when
-        every conflict rebases (the r10 measurement that motivated
-        this; BASELINE.md "Residual ceilings" item 1).
+        The write phase (:meth:`_write_phase`) holds every Spark job a
+        commit needs: the clustered data write, the footer stats scan,
+        the bloom build, the constraint check and (merge-on-read) the
+        DV sidecar write.  Preparing it lock-free lets N racing
+        writers' data jobs run in PARALLEL; the publish's lock hold
+        then covers only conflict analysis (CAS / logical rebase) and
+        the manifest/marker/pointer write — driver metadata work in
+        O(touched).
 
-        The staging placement is VERSION-INDEPENDENT and rename-free:
+        The staging placement is version-independent and rename-free:
         data files stay in the staging directory forever and manifests
         reference them there, exactly like carried version-dir entries
         — nothing moves at publish time, so the object-store protocol
-        needs no copy.  Abandoned stagings (a genuinely-conflicted
-        prepare that must recompute, or a crashed writer) are
-        reclaimed by :meth:`vacuum` after ``staged_gc_grace_seconds``.
+        needs no copy.  Abandoned stagings (a conflicted prepare that
+        must recompute, or a crashed writer) are reclaimed by
+        :meth:`vacuum` after ``staged_gc_grace_seconds``.
 
         ``base_version`` — the CAS snapshot the caller computed
         against (defaults to the live version); inherited metadata
@@ -3472,11 +3484,10 @@ class VersionedParquetTable:
         merge-on-read deletes (same contract as
         :meth:`commit_with_manifest`); require ``dv_touched`` (path →
         BASE entry of every possibly-affected file — the commit-time
-        ``carried_touched`` set).  The sidecar is written into the
-        staging dir here, so even a MoR commit's lock hold runs no
-        Spark job; sound through a rebase because the sidecar depends
-        only on the touched entries' prior DVs, which
-        ``_rebase_compatible`` proves identical between base and head.
+        ``carried_touched`` set).  The sidecar is sound through a
+        rebase because it depends only on the touched entries' prior
+        DVs, which ``_rebase_compatible`` proves identical between
+        base and head.
 
         Returns the prepared token (a plain dict; treat as opaque).
         On any failure the staging directory is removed before the
@@ -3485,48 +3496,108 @@ class VersionedParquetTable:
 
         if base_version is None:
             base_version = self.current_version()
-        meta = self._resolve_write_meta(
+        return self._write_phase(
             df,
             key,
+            os.path.join(_STAGED, f"p-{uuid.uuid4().hex}"),
             base_version=base_version,
             version_hint=(base_version or 0) + 1,
+            cluster_partitions=cluster_partitions,
+            append_split=append_split,
+            band_rows_hint=band_rows_hint,
             stats_columns=stats_columns,
             key_columns=key_columns,
             column_mapping=column_mapping,
             retired_physical=retired_physical,
             constraints=constraints,
             bloom_columns=bloom_columns,
+            cluster_by=cluster_by,
+            entry_flags=entry_flags,
             clustering=clustering,
+            dv_updates=dv_updates,
+            dv_updates_df=dv_updates_df,
+            dv_delta_counts=dv_delta_counts,
+            dv_touched=dv_touched,
+        )
+
+    def _write_phase(
+        self,
+        df: DataFrame,
+        key: str,
+        out_rel: str,
+        *,
+        base_version: int | None,
+        version_hint: int,
+        cluster_partitions: int | None = None,
+        append_split=None,
+        band_rows_hint=None,
+        cluster_by=None,
+        entry_flags: dict | None = None,
+        dv_updates: dict | None = None,
+        dv_updates_df: DataFrame | None = None,
+        dv_delta_counts: dict | None = None,
+        dv_touched: dict | None = None,
+        skip_data_write: bool = False,
+        **meta_args,
+    ) -> dict:
+        """The ONE write phase of every manifest commit: resolve the
+        logical→physical write state against ``base_version``, write
+        the range-clustered data files into ``out_rel`` (relative to
+        the root), scan their footer stats, stamp ``entry_flags``,
+        build blooms, enforce CHECK constraints and write the DV
+        sidecar.  ``skip_data_write`` writes no data files (the
+        metadata-shape commit: DVs only, or nothing).
+
+        :meth:`prepare_commit` runs it lock-free into a staging dir;
+        the inline :meth:`commit_with_manifest` runs it under the lock,
+        after the CAS and rebase, into the new version dir.  Either way
+        it returns the same token (``new_entries``, the resolved
+        metadata and the ``dv`` sidecar refs) and the publish reads
+        nothing else.  On failure ``out_rel`` is removed before the
+        exception propagates (nothing references it yet)."""
+        meta = self._resolve_write_meta(
+            df,
+            key,
+            base_version=base_version,
+            version_hint=version_hint,
             cluster_by=cluster_by,
             append_split=append_split,
+            **meta_args,
         )
-        staging_rel = os.path.join(_STAGED, f"p-{uuid.uuid4().hex}")
-        outdir = os.path.join(self.root, staging_rel)
+        outdir = os.path.join(self.root, out_rel)
+        new_entries: list = []
+        dv = None
         try:
-            n_out = cluster_partitions or int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8")
-            )
-            self._write_clustered_data(
-                meta["df"],
-                outdir,
-                meta["key"],
-                n_out,
-                append_split=append_split,
-                band_rows_hint=band_rows_hint,
-                cluster_by=cluster_by,
-            )
-            extras = tuple(
-                c for c in (meta["stats_columns"] or ()) if c != meta["key"]
-            )
-            new_entries = scan_file_stats(
-                outdir,
-                meta["key"],
-                relative_to=self.root,
-                extra_columns=extras,
-            )
-            if entry_flags:
-                for e in new_entries:
-                    e.update(entry_flags)
+            if skip_data_write:
+                os.makedirs(outdir, exist_ok=True)
+            else:
+                n_out = cluster_partitions or int(
+                    df.sparkSession.conf.get(
+                        "spark.sql.shuffle.partitions", "8"
+                    )
+                )
+                self._write_clustered_data(
+                    meta["df"],
+                    outdir,
+                    meta["key"],
+                    n_out,
+                    append_split=append_split,
+                    band_rows_hint=band_rows_hint,
+                    cluster_by=cluster_by,
+                )
+                extras = tuple(
+                    c
+                    for c in (meta["stats_columns"] or ())
+                    if c != meta["key"]
+                )
+                new_entries = scan_file_stats(
+                    outdir,
+                    meta["key"],
+                    relative_to=self.root,
+                    extra_columns=extras,
+                )
+            for e in new_entries:
+                e.update(entry_flags or {})
             if meta["bloom_columns"] and new_entries:
                 _bloom_build_for_files(
                     self.root, outdir, new_entries, meta["bloom_columns"]
@@ -3539,13 +3610,11 @@ class VersionedParquetTable:
                     meta["column_mapping"],
                     meta["logical_schema"],
                 )
-            dv = None
             if dv_updates or dv_updates_df is not None:
                 if not dv_touched:
                     raise ValueError(
-                        "DV arguments at prepare time require "
-                        "dv_touched (path → base entry of every "
-                        "possibly-affected file)"
+                        "DV arguments require dv_touched (path → base "
+                        "entry of every possibly-affected file)"
                     )
                 full_counts, alive_dv, name = self._build_dv_sidecar(
                     outdir,
@@ -3558,7 +3627,7 @@ class VersionedParquetTable:
                     "full_counts": full_counts,
                     "alive": sorted(alive_dv),
                     "sidecar_rel": (
-                        os.path.join(staging_rel, name)
+                        os.path.join(out_rel, name)
                         if name is not None
                         else None
                     ),
@@ -3568,19 +3637,24 @@ class VersionedParquetTable:
             raise
         return {
             **({"dv": dv} if dv is not None else {}),
-            "staging_rel": staging_rel,
+            "staging_rel": out_rel,
             "base_version": base_version,
             "new_entries": new_entries,
             "new_bytes": sum(e["bytes"] for e in new_entries),
-            "key": meta["key"],
-            "stats_columns": meta["stats_columns"],
-            "key_columns": meta["key_columns"],
-            "column_mapping": meta["column_mapping"],
-            "retired_physical": meta["retired_physical"],
-            "constraints": meta["constraints"],
-            "bloom_columns": meta["bloom_columns"],
-            "clustering": meta["clustering"],
-            "schema_json": meta["schema_json"],
+            **{
+                k: meta[k]
+                for k in (
+                    "key",
+                    "stats_columns",
+                    "key_columns",
+                    "column_mapping",
+                    "retired_physical",
+                    "constraints",
+                    "bloom_columns",
+                    "clustering",
+                    "schema_json",
+                )
+            },
         }
 
     def discard_prepared(self, prepared: dict) -> None:
@@ -3628,13 +3702,20 @@ class VersionedParquetTable:
         """Commit ``df``'s rows as NEW data files plus ``carried``
         prior-version file entries BY REFERENCE, under one manifest.
 
+        Every commit is ONE write phase (:meth:`_write_phase`: data
+        write, footer stats, blooms, constraint check, DV sidecar)
+        followed by ONE publish under the commit lock: CAS / logical
+        rebase, then manifest, ``_COMMITTED`` marker and pointer swap
+        (the crash protocol of :meth:`commit`).  With ``prepared`` the
+        write phase already ran lock-free (:meth:`prepare_commit`);
+        without it, this call runs the write phase under the lock,
+        AFTER the CAS and rebase, into the new version directory — so
+        a CAS failure aborts before any write job.
+
         New files are range-clustered on ``key`` (repartitionByRange +
         sortWithinPartitions) so their footer min/max ranges are tight
         and near-disjoint — that clustering is what makes the NEXT
-        pruned merge's touched set small.  Per-file stats are collected
-        footer-only after the write and recorded in the manifest with
-        the carried entries verbatim.  Same lock / marker-before-
-        pointer crash protocol as :meth:`commit`.
+        pruned merge's touched set small.
 
         ``append_split=(lo, hi)`` — layout hint from the pruned MERGE:
         rows with ``key`` OUTSIDE [lo, hi] (the out-of-range inserts of
@@ -3685,12 +3766,16 @@ class VersionedParquetTable:
         DV updates applied (touched entries re-pointed, fully-deleted
         entries dropped), built segment-wise so the untouched entries
         are NEVER materialized — driver cost O(touched), the form
-        row-level DML uses on big tables.  ``carried_touched`` maps
-        each possibly-affected path to its base entry (the caller's
-        pruned candidate set; every ``dv_updates`` path must be in
-        it).  ``carried_exclude`` (path → base entry) names base
-        entries to REMOVE outright — the copy-on-write merge's
-        touched files, whose rows the new data files replace.
+        row-level DML and the pruned merges use.  ``carried_touched``
+        maps each possibly-affected path to its base entry (the
+        caller's pruned candidate set; every ``dv_updates`` path must
+        be in it); when this commit records a different ``key`` or
+        ``stats_columns`` than the base, its entries re-state the base
+        entries' stats (a merge on columns the base has no stats for
+        carries re-scanned entries).  ``carried_exclude`` (path → base
+        entry) names base entries to REMOVE outright — the
+        copy-on-write merge's touched files, whose rows the new data
+        files replace.
         Requires ``expected_base_version == carried_base_version``
         — the CAS is what guarantees the base list is still the live
         one.
@@ -3800,17 +3885,16 @@ class VersionedParquetTable:
         table's last explicit clustering (inherited until replaced,
         surfaced by :meth:`detail`).
 
-        ``prepared`` — a token from :meth:`prepare_commit` (the
-        prepare/publish split): the data files, footer stats, blooms
-        and constraint check were all produced OUTSIDE the lock into a
-        content-addressed staging directory; this call publishes them
-        — its lock hold covers only conflict analysis and the
-        manifest/marker/pointer write, so racing writers' data jobs
-        run in parallel.  Requires ``expected_base_version ==
-        prepared["base_version"]`` and ``df=None``; ``key`` and the
-        per-write layout/metadata arguments are taken from the token.
-        A CAS failure that cannot rebase reclaims the staging
-        directory before raising (the prepared output is stale).
+        ``prepared`` — a token from :meth:`prepare_commit`: the write
+        phase already ran lock-free into a staging directory, so the
+        lock hold covers only conflict analysis and the publish.
+        Requires ``df=None`` and ``expected_base_version ==
+        prepared["base_version"]``; ``key`` and the layout/metadata
+        arguments are taken from the token.  Only three steps differ
+        for a prepared token: a token past the staged-GC grace window
+        raises :class:`StalePreparedError`, a CAS failure that cannot
+        rebase reclaims the staging directory, and a published staging
+        directory is marked ``_PUBLISHED`` for vacuum.
 
         ``rebase_on_conflict`` — Delta-style logical conflict scoping
         for the CAS: ``{"touched": iterable of base paths this commit
@@ -3824,16 +3908,12 @@ class VersionedParquetTable:
         ``manifest["rebase"]`` + ``self._last_commit_rebase``.
         Overlapping scopes still raise :class:`SnapshotConflictError`.
         """
-        from pyspark.sql import functions as F
-
         if carried_base_version is not None:
-            # carried-BY-BASE form (row-level DML on big tables): the
-            # version is base's ENTIRE file list minus DV-dropped
-            # entries, with DV-repointed entries swapped in — built
-            # WITHOUT materializing the untouched entries, so commit
-            # driver cost is O(touched), not O(table files).
-            # ``carried_touched`` maps each possibly-affected path to
-            # its base entry (the caller's pruned candidate set).
+            # carried-BY-BASE form (row-level DML, the pruned merges):
+            # the version is base's ENTIRE file list minus excluded
+            # entries, with re-pointed / re-stated entries swapped in —
+            # built WITHOUT materializing the untouched entries, so
+            # commit driver cost is O(touched), not O(table files)
             if carried is not None:
                 raise ValueError(
                     "pass carried OR carried_base_version, not both"
@@ -3854,86 +3934,48 @@ class VersionedParquetTable:
             raise ValueError(
                 "carried_exclude only applies with carried_base_version"
             )
-        if prepared is not None:
-            if df is not None:
-                raise ValueError(
-                    "prepared commits take df=None — the data was "
-                    "written by prepare_commit"
-                )
-            if skip_data_write:
-                raise ValueError(
-                    "skip_data_write does not combine with prepared"
-                )
-            if expected_base_version is _NO_CAS:
-                raise ValueError(
-                    "prepared commits require expected_base_version "
-                    "(the snapshot prepare_commit resolved against)"
-                )
-            if expected_base_version != prepared["base_version"]:
-                raise ValueError(
-                    "expected_base_version must equal the prepared "
-                    "token's base_version — inherited metadata was "
-                    "resolved against that snapshot"
-                )
+        if prepared is not None and (
+            df is not None
+            or skip_data_write
+            or dv_updates
+            or dv_updates_df is not None
+            or expected_base_version != prepared["base_version"]
+        ):
+            raise ValueError(
+                "prepared commits take df=None, no skip_data_write or DV "
+                "arguments (prepare_commit consumed them), and "
+                "expected_base_version equal to the token's base_version "
+                "(the snapshot its metadata was resolved against)"
+            )
         self._acquire_lock()
         try:
             self._last_commit_rebase = None
             if prepared is not None:
-                # staged-GC fence, checked under the SAME lock
-                # vacuum's sweep holds: a token held past the grace
-                # window may have had its staging reclaimed (or be
-                # about to) — publishing it would commit a manifest
-                # referencing deleted files.  The prepare/publish
-                # contract is therefore enforced, not just documented:
-                # publish within the grace window or re-prepare.
-                import time as _t
-
-                sdir = os.path.join(self.root, prepared["staging_rel"])
-                try:
-                    age = _t.time() - os.path.getmtime(sdir)
-                except OSError:
-                    age = None
-                if age is None or age >= self.staged_gc_grace_seconds:
-                    self.discard_prepared(prepared)
-                    raise StalePreparedError(
-                        f"{self.root}: prepared staging "
-                        f"{prepared['staging_rel']!r} is "
-                        + (
-                            "gone (reclaimed by vacuum's staged sweep)"
-                            if age is None
-                            else f"{age:.0f}s old, past the "
-                            f"{self.staged_gc_grace_seconds:.0f}s "
-                            "staged-GC grace window"
-                        )
-                        + " — re-run prepare_commit against the live head"
-                    )
+                self._check_staged_fence(prepared)
             cur = self.current_version()
             if expected_base_version is not _NO_CAS and cur != expected_base_version:
                 scope = rebase_on_conflict or {}
-                touched_scope = set(scope.get("touched") or ())
                 if not self._rebase_compatible(
                     expected_base_version,
                     cur,
-                    touched_scope,
+                    set(scope.get("touched") or ()),
                     scope.get("might_touch"),
                     scope.get("might_touch_batch"),
                 ):
-                    # carried entries (and the merged subset itself)
-                    # describe the snapshot at expected_base_version —
-                    # publishing them over a newer version would drop
-                    # the interleaved commit's rows, so this is a CAS
-                    # failure the caller must recompute for.
+                    # carried entries (and the written data) describe
+                    # the snapshot at expected_base_version — publishing
+                    # them over a newer version would drop the
+                    # interleaved commit's rows: the caller recomputes
                     if prepared is not None:
-                        # the prepared output is stale against the new
-                        # head; reclaim its staging now rather than
-                        # waiting out vacuum's grace sweep
+                        # stale against the new head: reclaim the
+                        # staging now, not after vacuum's grace window
                         self.discard_prepared(prepared)
                     raise SnapshotConflictError(expected_base_version, cur)
                 # logical REBASE: every racing commit provably touched
                 # files and key ranges disjoint from this commit's
-                # scope, so the prepared output is valid against the
-                # live head verbatim — retarget the carried base under
-                # the same lock hold instead of recomputing the merge.
+                # scope, so its output is valid against the live head
+                # verbatim — retarget the carried base under the same
+                # lock hold instead of recomputing
                 self._last_commit_rebase = {
                     "planned_base": expected_base_version,
                     "onto": cur,
@@ -3973,200 +4015,58 @@ class VersionedParquetTable:
             self._reconcile_orphans()
             versions = self._versions_on_disk()
             next_v = (versions[-1] + 1) if versions else 1
+            vrel = f"v{next_v:08d}"
             vdir = self._version_dir(next_v)
-
-            # ---- column mapping: resolve logical -> physical space
-            # (shared helper with the lock-free prepare phase).  The
-            # manifest's schema stays LOGICAL; data files, key,
-            # stats_columns and per-file stats are PHYSICAL.  The
-            # prior manifest is read only when the caller didn't
-            # supply the inherited state (the pruned merge passes all
-            # of it from its own single read).  A prepared commit
-            # resolved all of this at prepare time against its CAS
-            # snapshot — sound here because either cur == that
-            # snapshot or the rebase above proved every
-            # _REBASE_META_FIELD identical.
-            if prepared is not None:
-                meta = prepared
-            else:
-                meta = self._resolve_write_meta(
-                    df,
-                    key,
-                    base_version=cur,
-                    version_hint=next_v,
-                    stats_columns=stats_columns,
-                    key_columns=key_columns,
-                    column_mapping=column_mapping,
-                    retired_physical=retired_physical,
-                    constraints=constraints,
-                    bloom_columns=bloom_columns,
-                    clustering=clustering,
-                    cluster_by=cluster_by,
-                    append_split=append_split,
-                )
-            key = meta["key"]
-            stats_columns = meta["stats_columns"]
-            key_columns = meta["key_columns"]
-            column_mapping = meta["column_mapping"]
-            retired_physical = meta["retired_physical"]
-            constraints = meta["constraints"]
-            bloom_columns = meta["bloom_columns"]
-            clustering = meta["clustering"]
-
-            if prepared is not None:
-                # data files, stats, blooms and the constraint check
-                # were all produced at PREPARE time into the staging
-                # dir; the version dir carries only metadata
-                os.makedirs(vdir, exist_ok=True)
-                new_entries = [dict(e) for e in meta["new_entries"]]
-            elif skip_data_write:
-                # metadata-shape commit (delete_where, restore): the
-                # caller guarantees df carries no rows — the version is
-                # carried entries (+ DV updates) only, and no Spark job
-                # runs at all
-                os.makedirs(vdir, exist_ok=True)
-                new_entries = []
-            else:
-                n_out = cluster_partitions or int(
-                    df.sparkSession.conf.get(
-                        "spark.sql.shuffle.partitions", "8"
-                    )
-                )
-                self._write_clustered_data(
-                    meta["df"],
-                    vdir,
-                    key,
-                    n_out,
-                    append_split=append_split,
-                    band_rows_hint=band_rows_hint,
-                    cluster_by=cluster_by,
-                )
-                new_entries = scan_file_stats(
-                    vdir,
-                    key,
-                    relative_to=self.root,
-                    extra_columns=tuple(
-                        c for c in (stats_columns or ()) if c != key
-                    ),
-                )
-            extras = tuple(c for c in (stats_columns or ()) if c != key)
-            if entry_flags and prepared is None:
-                # prepared entries carry their flags from prepare time
-                for e in new_entries:
-                    e.update(entry_flags)
-            if bloom_columns and new_entries and prepared is None:
-                _bloom_build_for_files(
-                    self.root, vdir, new_entries, bloom_columns
-                )
-            dml_exclude: dict = {}
-            dml_replaced: dict = {}
-            dv_info = (prepared or {}).get("dv")
-            if dv_info is not None and (
-                dv_updates or dv_updates_df is not None
-            ):
-                raise ValueError(
-                    "DV arguments were consumed by prepare_commit; "
-                    "pass them there only"
-                )
-            if dv_info is not None or dv_updates or dv_updates_df is not None:
-                by_path = (
-                    carried_touched
-                    if carried_base_version is not None
-                    else {e["path"]: e for e in (carried or [])}
-                )
-                if dv_info is None:
-                    full_counts, alive_dv, name = self._build_dv_sidecar(
-                        vdir,
-                        by_path,
-                        dv_updates,
-                        dv_updates_df,
-                        dv_delta_counts,
-                    )
-                    touched_dv = set(full_counts)
-                    sidecar_rel = (
-                        os.path.join(f"v{next_v:08d}", name)
-                        if name is not None
-                        else None
-                    )
-                else:
-                    # prepared at PREPARE time into the staging dir
-                    # (the sidecar content depends only on the touched
-                    # base entries' prior DVs, which a rebase proves
-                    # identical between base and head)
-                    touched_dv = set(dv_info["full_counts"])
-                    missing = touched_dv - set(by_path)
-                    if missing:
-                        raise ValueError(
-                            "prepared DV paths must name carried "
-                            f"entries; unknown: {sorted(missing)[:3]}"
-                        )
-                    full_counts = dv_info["full_counts"]
-                    alive_dv = set(dv_info["alive"])
-                    sidecar_rel = dv_info["sidecar_rel"]
-                if carried_base_version is not None:
-                    # base form: the touched entries become an
-                    # exclude/replace edit applied segment-wise by
-                    # _persist_manifest_from_base — untouched entries
-                    # are never materialized
-                    dml_exclude = {
-                        r: by_path[r]
-                        for r in touched_dv
-                        if r not in alive_dv
-                    }
-                    dml_replaced = {
-                        r: {
-                            **by_path[r],
-                            "dv": {
-                                "path": sidecar_rel,
-                                "rows": int(full_counts[r]),
-                            },
-                        }
-                        for r in alive_dv
-                    }
-                else:
-                    rewritten_carried = []
-                    for e in carried or []:
-                        if e["path"] in touched_dv:
-                            if e["path"] not in alive_dv:
-                                continue  # every row deleted: drop entry
-                            e = {
-                                **e,
-                                "dv": {
-                                    "path": sidecar_rel,
-                                    "rows": int(full_counts[e["path"]]),
-                                },
-                            }
-                        rewritten_carried.append(e)
-                    carried = rewritten_carried
-            if constraints and new_entries and prepared is None:
-                # prepared commits checked at prepare time (same code)
-                self._enforce_constraints(
-                    df.sparkSession,
-                    constraints,
-                    new_entries,
-                    column_mapping,
-                    meta["logical_schema"],
-                )
-            man = {
-                "key": key,
-                "schema": meta["schema_json"],
-            }
-            if carried_base_version is None:
-                man["files"] = list(carried or []) + new_entries
+            by_path = (
+                carried_touched
+                if carried_base_version is not None
+                else {e["path"]: e for e in (carried or [])}
+            )
+            # the write phase: already run lock-free for a prepared
+            # token; otherwise here, against the (possibly rebased)
+            # head, into the version dir
+            token = prepared or self._write_phase(
+                df,
+                key,
+                vrel,
+                base_version=cur,
+                version_hint=next_v,
+                cluster_partitions=cluster_partitions,
+                append_split=append_split,
+                band_rows_hint=band_rows_hint,
+                stats_columns=stats_columns,
+                key_columns=key_columns,
+                column_mapping=column_mapping,
+                retired_physical=retired_physical,
+                constraints=constraints,
+                bloom_columns=bloom_columns,
+                cluster_by=cluster_by,
+                entry_flags=entry_flags,
+                clustering=clustering,
+                dv_updates=dv_updates,
+                dv_updates_df=dv_updates_df,
+                dv_delta_counts=dv_delta_counts,
+                dv_touched=by_path,
+                skip_data_write=skip_data_write,
+            )
+            os.makedirs(vdir, exist_ok=True)
+            key = token["key"]
+            extras = tuple(
+                c for c in (token["stats_columns"] or ()) if c != key
+            )
+            man = {"key": key, "schema": token["schema_json"]}
             if extras:
                 man["stats_columns"] = [key, *extras]
-            if key_columns:
-                man["key_columns"] = list(key_columns)
-            if column_mapping:
-                man["column_mapping"] = dict(column_mapping)
-            if retired_physical:
-                man["retired_physical"] = list(retired_physical)
-            if constraints:
-                man["constraints"] = dict(constraints)
-            if bloom_columns:
-                man["bloom_columns"] = list(bloom_columns)
-            if clustering:
-                man["clustering"] = dict(clustering)
+            for f, conv in (
+                ("key_columns", list),
+                ("column_mapping", dict),
+                ("retired_physical", list),
+                ("constraints", dict),
+                ("bloom_columns", list),
+                ("clustering", dict),
+            ):
+                if token[f]:
+                    man[f] = conv(token[f])
             if operation:
                 # per-commit DESCRIBE HISTORY attribution (never
                 # inherited): what kind of write produced this version
@@ -4174,21 +4074,64 @@ class VersionedParquetTable:
             if app_metadata:
                 man["app_metadata"] = dict(app_metadata)
             if self._last_commit_rebase:
-                # durable audit: this version was prepared against
+                # durable audit: this version was computed against
                 # planned_base and rebased onto the head at commit time
                 man["rebase"] = dict(self._last_commit_rebase)
+            # the carried-set edit: excluded entries drop out, replaced
+            # entries swap in for their base entries
+            exclude = dict(carried_exclude or {})
+            replaced: dict = {}
             if carried_base_version is not None:
-                dml_exclude.update(carried_exclude or {})
-                os.makedirs(vdir, exist_ok=True)
+                raw_b = self._raw_manifest(carried_base_version) or {}
+                if (raw_b.get("key"), raw_b.get("stats_columns")) != (
+                    man["key"],
+                    man.get("stats_columns"),
+                ):
+                    # the commit re-keys the table's stats: carried
+                    # entries are the caller's re-scanned ones
+                    replaced = {
+                        p: e
+                        for p, e in carried_touched.items()
+                        if p not in exclude
+                    }
+            dv = token.get("dv")
+            if dv is not None:
+                missing = set(dv["full_counts"]) - set(by_path)
+                if missing:
+                    raise ValueError(
+                        "DV paths must name carried entries; unknown: "
+                        f"{sorted(missing)[:3]}"
+                    )
+                alive = set(dv["alive"])
+                for p, rows in dv["full_counts"].items():
+                    if p in alive:
+                        replaced[p] = {
+                            **by_path[p],
+                            "dv": {
+                                "path": dv["sidecar_rel"],
+                                "rows": int(rows),
+                            },
+                        }
+                    else:
+                        # every row deleted: drop the entry
+                        exclude[p] = by_path[p]
+                        replaced.pop(p, None)
+            new_entries = [dict(e) for e in token["new_entries"]]
+            if carried_base_version is not None:
                 self._persist_manifest_from_base(
                     vdir,
                     man,
                     carried_base_version,
-                    exclude=dml_exclude,
-                    replaced=dml_replaced,
+                    exclude=exclude,
+                    replaced=replaced,
                     new_entries=new_entries,
                 )
             else:
+                man["files"] = [
+                    replaced.get(e["path"], e)
+                    for e in carried or []
+                    if e["path"] not in exclude
+                ] + new_entries
                 self._persist_manifest(vdir, man, base_version=cur)
             self._write_marker(vdir)
             self._swap_pointer(next_v)
@@ -4207,12 +4150,41 @@ class VersionedParquetTable:
                         ),
                         "w",
                     ) as f:
-                        f.write(f"v{next_v:08d}")
+                        f.write(vrel)
                 except OSError:
                     pass
             return next_v
         finally:
             self._release_lock()
+
+    def _check_staged_fence(self, prepared: dict) -> None:
+        """Staged-GC fence, checked under the SAME lock vacuum's sweep
+        holds: a token held past the grace window may have had its
+        staging reclaimed (or be about to) — publishing it would
+        commit a manifest referencing deleted files.  The
+        prepare/publish contract is therefore enforced, not just
+        documented: publish within the grace window or re-prepare."""
+        import time
+
+        sdir = os.path.join(self.root, prepared["staging_rel"])
+        try:
+            age = time.time() - os.path.getmtime(sdir)
+        except OSError:
+            age = None
+        if age is None or age >= self.staged_gc_grace_seconds:
+            self.discard_prepared(prepared)
+            raise StalePreparedError(
+                f"{self.root}: prepared staging "
+                f"{prepared['staging_rel']!r} is "
+                + (
+                    "gone (reclaimed by vacuum's staged sweep)"
+                    if age is None
+                    else f"{age:.0f}s old, past the "
+                    f"{self.staged_gc_grace_seconds:.0f}s "
+                    "staged-GC grace window"
+                )
+                + " — re-run prepare_commit against the live head"
+            )
 
     def _lock_path(self) -> str:
         return os.path.join(self.root, _LOCK)
@@ -4618,9 +4590,9 @@ class VersionedParquetTable:
         it READ (``scope_paths`` — the entry-identity check in
         ``_rebase_compatible``); racing ADDITIONS and rewrites of
         other files can never interact with its output and are
-        absorbed by rebuilding the carried set from the live head
-        (constant-False ``might_touch``, head files minus
-        ``exclude=scope_paths``).  A genuine scope overlap raises
+        absorbed by retargeting the carried base onto the live head
+        (constant-False ``might_touch``; the read files are the
+        ``carried_exclude`` edit).  A genuine scope overlap raises
         ``SnapshotConflictError`` — the staging dir is reclaimed by
         the publish — and the caller recomputes against the new head.
 
@@ -4639,13 +4611,13 @@ class VersionedParquetTable:
             entry_flags=entry_flags,
             clustering=clustering,
         )
-        carried = [
-            e for e in man["files"] if e["path"] not in scope_paths
-        ]
         version = self.commit_with_manifest(
             None,
             l_key,
-            carried=carried,
+            carried_base_version=base_version,
+            carried_exclude={
+                e["path"]: e for e in man["files"] if e["path"] in scope_paths
+            },
             prepared=prepared,
             expected_base_version=base_version,
             app_metadata=man.get("app_metadata"),

@@ -77,7 +77,7 @@ class IncrementalPipeline:
         (reference: ``source`` / ``timestamp``).
     transform : DataFrame -> DataFrame applied to the incremental slice.
     sink : callable receiving the transformed slice; must be idempotent
-        under replay (e.g. ``merge_upsert_write``).  State advances only
+        under replay (e.g. ``merge_upsert_write_pruned``).  State advances only
         if it returns without raising (T4 ordering).
     fallback : first-run lower bound (inclusive ``>=``), reference's
         ``embeddings_fallback_date`` (T2, CONFIGURATION.md:50).

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from airflow_embeddings_pipeline_spark.operators.merge import (
     merge_counts,
     merge_upsert,
-    merge_upsert_write,
+    merge_upsert_write_pruned,
 )
 
 
@@ -72,21 +72,24 @@ def test_merge_upsert_write_versioned_commit(spark, tmp_path):
 
     path = str(tmp_path / "target")
     _target(spark).write.parquet(path)  # legacy plain-parquet table
-    v = merge_upsert_write(path, _source(spark), "main_refco")
+    # the first merge adopts the legacy directory (v1), then merges (v2)
+    v = merge_upsert_write_pruned(
+        path, _source(spark), "main_refco"
+    )["version"]
     table = VersionedParquetTable(path)
-    assert v == 1 and table.current_version() == 1
+    assert v == 2 and table.current_version() == 2
     out = {r["main_refco"]: r for r in table.read(spark).collect()}
     assert set(out) == {"k1", "k2", "k3", "k9"}
     assert out["k9"]["n"] == 90
     # replay: same source again ⇒ identical table (T4 idempotency)
     before = sorted(table.read(spark).collect())
-    v2 = merge_upsert_write(path, _source(spark), "main_refco")
-    assert v2 == 2 and sorted(table.read(spark).collect()) == before
-    # default vacuum keeps current + one previous version
-    versions = sorted(
-        d for d in os.listdir(path) if d.startswith("v") and d[1:].isdigit()
-    )
-    assert versions == ["v00000001", "v00000002"]
+    v3 = merge_upsert_write_pruned(
+        path, _source(spark), "main_refco"
+    )["version"]
+    assert v3 == 3 and sorted(table.read(spark).collect()) == before
+    # default vacuum keeps current + one previous version readable (the
+    # adoption's directory stays on disk: v3 still carries its files)
+    assert table.versions() == [2, 3]
 
 
 def test_versioned_crash_before_pointer_swap_keeps_old_live(spark, tmp_path, monkeypatch):
@@ -99,7 +102,8 @@ def test_versioned_crash_before_pointer_swap_keeps_old_live(spark, tmp_path, mon
 
     path = str(tmp_path / "target")
     _target(spark).write.parquet(path)
-    merge_upsert_write(path, _source(spark), "main_refco")  # v1 live
+    # adopts (v1) and merges (v2): v2 live
+    merge_upsert_write_pruned(path, _source(spark), "main_refco")
     table = VersionedParquetTable(path)
     live = sorted(table.read(spark).collect())
 
@@ -110,24 +114,23 @@ def test_versioned_crash_before_pointer_swap_keeps_old_live(spark, tmp_path, mon
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError):
-        merge_upsert_write(path, _source(spark), "main_refco")
+        merge_upsert_write_pruned(path, _source(spark), "main_refco")
     monkeypatch.undo()
 
-    # old version still live and readable; orphan v2 invisible to readers
-    assert table.current_version() == 1
+    # old version still live and readable; orphan v3 invisible to readers
+    assert table.current_version() == 2
     assert sorted(table.read(spark).collect()) == live
-    assert os.path.isdir(os.path.join(path, "v00000002"))  # the orphan
+    assert os.path.isdir(os.path.join(path, "v00000003"))  # the orphan
 
     # retry reconciles the orphan (deletes it, reuses its number) and
     # commits cleanly
-    v = merge_upsert_write(path, _source(spark), "main_refco")
-    assert v == 2 and table.current_version() == 2
+    v = merge_upsert_write_pruned(
+        path, _source(spark), "main_refco"
+    )["version"]
+    assert v == 3 and table.current_version() == 3
     assert sorted(table.read(spark).collect()) == live  # idempotent replay
-    # kept: v2 current + v1 previous-live; the orphan is gone
-    versions = sorted(
-        d for d in os.listdir(path) if d.startswith("v") and d[1:].isdigit()
-    )
-    assert versions == ["v00000001", "v00000002"]
+    # kept: v3 current + v2 previous-live; the orphan is gone
+    assert table.versions() == [2, 3]
 
 
 def test_versioned_rejects_remote_uri():
@@ -363,10 +366,6 @@ def test_merge_schema_evolution_appends_and_backfills(spark, tmp_path):
     table — matched/inserted rows take the source value, untouched
     target rows backfill NULL — and versioned commits make the widened
     schema the live one while old versions stay readable."""
-    from airflow_embeddings_pipeline_spark.operators.merge import (
-        merge_upsert,
-        merge_upsert_write,
-    )
     from airflow_embeddings_pipeline_spark.sources.versioned import (
         VersionedParquetTable,
     )
@@ -389,13 +388,13 @@ def test_merge_schema_evolution_appends_and_backfills(spark, tmp_path):
     # through the versioned table: widened schema becomes the live one
     path = str(tmp_path / "tbl")
     target.write.parquet(path)
-    merge_upsert_write(path, source, "k", schema_evolution=True,
-                       vacuum_keep_last=None)
+    merge_upsert_write_pruned(path, source, "k", schema_evolution=True,
+                              vacuum_keep_last=None)
     live = VersionedParquetTable(path).read(spark)
     assert "score" in live.columns and live.count() == 3
     # idempotent replay with the same batch: identical table
-    merge_upsert_write(path, source, "k", schema_evolution=True,
-                       vacuum_keep_last=None)
+    merge_upsert_write_pruned(path, source, "k", schema_evolution=True,
+                              vacuum_keep_last=None)
     again = VersionedParquetTable(path).read(spark)
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, live.collect()))
 

@@ -52,8 +52,10 @@ def test_pipeline_merge_replay_idempotent(spark, sf_dir):
     assert once == twice
 
 
-def test_orders_kps_template_clone_matches_direct_commit(spark, sf_dir):
-    """r12: lifecycle entries seed their scratch tables by cloning one
+def test_orders_kps_template_clone_matches_direct_commit(
+    spark, sf_dir, tmp_path
+):
+    """Lifecycle entries seed their scratch tables by cloning one
     per-process template.  The clone must be observationally identical
     to a direct initial commit (rows, schema, version number, manifest
     key/stats), reuse the memoized template on repeat seeds, and own an
@@ -63,48 +65,48 @@ def test_orders_kps_template_clone_matches_direct_commit(spark, sf_dir):
     from airflow_embeddings_pipeline_spark.plans.pipeline import (
         _ORDERS_KPS_TEMPLATES,
         _orders_kps_table,
-        _scratch_dir,
     )
     from airflow_embeddings_pipeline_spark.sources.registry import load_table
     from airflow_embeddings_pipeline_spark.sources.versioned import (
         VersionedParquetTable,
     )
 
-    a = _orders_kps_table(spark, sf_dir, _scratch_dir("/tmp/t_kps_a", sf_dir))
-    n_templates = len(_ORDERS_KPS_TEMPLATES)
-    b = _orders_kps_table(spark, sf_dir, _scratch_dir("/tmp/t_kps_b", sf_dir))
-    assert len(_ORDERS_KPS_TEMPLATES) == n_templates  # memo hit, no rebuild
+    roots = [str(tmp_path / n) for n in ("a", "b", "direct")]
+    try:
+        a = _orders_kps_table(spark, sf_dir, roots[0])
+        n_templates = len(_ORDERS_KPS_TEMPLATES)
+        b = _orders_kps_table(spark, sf_dir, roots[1])
+        assert len(_ORDERS_KPS_TEMPLATES) == n_templates  # memo hit
 
-    orders = load_table(spark, sf_dir, "orders")
-    direct_path = _scratch_dir("/tmp/t_kps_direct", sf_dir)
-    direct = VersionedParquetTable(direct_path)
-    direct.commit_with_manifest(
-        orders.select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_totalprice").cast("double").alias("price"),
-            F.col("o_orderstatus").alias("status"),
-        ),
-        "k",
-        cluster_partitions=16,
-    )
+        orders = load_table(spark, sf_dir, "orders")
+        direct = VersionedParquetTable(roots[2])
+        direct.commit_with_manifest(
+            orders.select(
+                F.col("o_orderkey").alias("k"),
+                F.col("o_totalprice").cast("double").alias("price"),
+                F.col("o_orderstatus").alias("status"),
+            ),
+            "k",
+            cluster_partitions=16,
+        )
 
-    da = a.read(spark).orderBy("k")
-    db = direct.read(spark).orderBy("k")
-    assert da.schema == db.schema
-    assert da.collect() == db.collect()
-    assert a.current_version() == direct.current_version() == 1
-    man_a, man_d = a.manifest(1), direct.manifest(1)
-    assert man_a["key"] == man_d["key"]
-    assert len(man_a["files"]) == len(man_d["files"])
-    # no CDC watermark leaks into the clone (a direct initial commit
-    # carries none); cloned_from provenance is the only extra key
-    meta = (man_a.get("app_metadata") or {})
-    assert "cdc_last_applied_version" not in meta
+        da = a.read(spark).orderBy("k")
+        db = direct.read(spark).orderBy("k")
+        assert da.schema == db.schema
+        assert da.collect() == db.collect()
+        assert a.current_version() == direct.current_version() == 1
+        man_a, man_d = a.manifest(1), direct.manifest(1)
+        assert man_a["key"] == man_d["key"]
+        assert len(man_a["files"]) == len(man_d["files"])
+        # no CDC watermark leaks into the clone (a direct initial commit
+        # carries none); cloned_from provenance is the only extra key
+        meta = (man_a.get("app_metadata") or {})
+        assert "cdc_last_applied_version" not in meta
 
-    # independent lifecycle: removing one clone leaves the other whole
-    rows_b = b.read(spark).count()
-    shutil.rmtree(a.root)
-    assert b.read(spark).count() == rows_b
-
-    for p in ("/tmp/t_kps_b", "/tmp/t_kps_direct"):
-        shutil.rmtree(p, ignore_errors=True)
+        # independent lifecycle: removing one clone leaves the other whole
+        rows_b = b.read(spark).count()
+        shutil.rmtree(a.root)
+        assert b.read(spark).count() == rows_b
+    finally:
+        for p in roots:
+            shutil.rmtree(p, ignore_errors=True)

@@ -19,12 +19,14 @@ between acquire and release)."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from airflow_embeddings_pipeline_spark.operators import merge as merge_mod
 from airflow_embeddings_pipeline_spark.operators.merge import (
     merge_upsert_write_pruned,
 )
@@ -49,53 +51,127 @@ def _rows(spark, t):
     return sorted(map(tuple, t.read(spark).select("k", "v").collect()))
 
 
+def _entry_stats(t, version):
+    """Placement-free view of a version's entries: per-file key range,
+    row count, extra stats, DV row count and bloom presence."""
+    return sorted(
+        (
+            e["min"],
+            e["max"],
+            e["n_rows"],
+            json.dumps(e.get("stats"), sort_keys=True),
+            (e.get("dv") or {}).get("rows"),
+            bool(e.get("bloom")),
+        )
+        for e in t.manifest(version)["files"]
+    )
+
+
 class TestPreparedParity:
-    def test_prepared_equals_inline(self, spark, tmp_path):
-        """prepare+publish and the inline commit produce row-identical
-        tables with equivalent manifests (same stats columns, same
-        entry stats) — only the data placement differs."""
-        roots = {}
-        for mode in ("inline", "prepared"):
-            root = str(tmp_path / mode)
+    def test_prepared_equals_inline(self, spark, tmp_path, monkeypatch):
+        """prepare+publish and the inline commit run the same write
+        phase: row-identical tables with the same per-file stats, only
+        the data placement differs.  Covered: a plain append, a bloom
+        column, a CHECK constraint, a merge-on-read DV commit, and the
+        pruned merge in both publish modes."""
+        add = spark.createDataFrame(
+            [(9_000, -1), (9_001, -2)], "k long, v long"
+        )
+
+        def bloom_table(root):
             t = _mk(spark, root)
-            add = spark.createDataFrame(
-                [(9_000, -1), (9_001, -2)], "k long, v long"
+            t.add_bloom_index("v")
+            return t
+
+        def constrained_table(root):
+            t = VersionedParquetTable(root)
+            t.commit_with_manifest(
+                spark.range(2_000).selectExpr("id as k", "id * 2 as v"),
+                "k",
+                cluster_partitions=4,
+                constraints={"v_floor": "v >= -10"},
             )
-            man = t.manifest(1)
+            return t
+
+        def commit(t, mode, with_dv=False):
+            v = t.current_version()
+            carried = t.manifest(v)["files"]
+            dv = {}
+            if with_dv:
+                e = carried[0]
+                dv = {"dv_updates": {e["path"]: [0, 1]}}
             if mode == "inline":
                 t.commit_with_manifest(
-                    add, "k",
-                    carried=man["files"],
-                    expected_base_version=1,
+                    add, "k", carried=carried, expected_base_version=v, **dv
                 )
             else:
-                prep = t.prepare_commit(add, "k", base_version=1)
+                if with_dv:
+                    dv["dv_touched"] = {e["path"]: e}
+                prep = t.prepare_commit(add, "k", base_version=v, **dv)
                 t.commit_with_manifest(
                     None, "k",
-                    carried=man["files"],
-                    expected_base_version=1,
+                    carried=carried,
+                    expected_base_version=v,
                     prepared=prep,
                 )
-            roots[mode] = t
-        assert _rows(spark, roots["inline"]) == _rows(spark, roots["prepared"])
-        # prepared placement: new entries live under _staged/p-*/
-        man2 = roots["prepared"].manifest(2)
-        new = [e for e in man2["files"] if e["path"].startswith(_STAGED)]
-        assert new, "prepared commit must reference staged data files"
-        for e in new:
-            assert os.path.exists(
-                os.path.join(roots["prepared"].root, e["path"])
+
+        def merge(t, mode):
+            monkeypatch.setattr(
+                merge_mod, "_conflict_storming", lambda root: mode == "inline"
             )
-        # stats recorded identically (same key mins/maxs per new file)
-        i_new = sorted(
-            (e["min"], e["max"], e["n_rows"])
-            for e in roots["inline"].manifest(2)["files"]
-            if e["path"].startswith("v00000002")
-        )
-        p_new = sorted(
-            (e["min"], e["max"], e["n_rows"]) for e in new
-        )
-        assert i_new == p_new
+            stats = merge_upsert_write_pruned(
+                t.root,
+                spark.createDataFrame(
+                    [(5, -1), (1_500, -3), (9_000, -2)], "k long, v long"
+                ),
+                "k",
+                vacuum_keep_last=None,
+            )
+            monkeypatch.undo()
+            assert stats["bytes_rewritten"] > 0
+
+        def plain_table(root):
+            return _mk(spark, root)
+
+        cases = {
+            "append": (plain_table, commit),
+            "bloom": (bloom_table, commit),
+            "constraint": (constrained_table, commit),
+            "mor_dv": (
+                plain_table, lambda t, mode: commit(t, mode, with_dv=True)
+            ),
+            "merge": (plain_table, merge),
+        }
+        for case, (make, run) in cases.items():
+            # one base, cloned per mode: range clustering samples, so
+            # two independent base commits may cut files differently
+            base = make(str(tmp_path / case / "base"))
+            tables = {}
+            for mode in ("inline", "prepared"):
+                root = str(tmp_path / case / mode)
+                base.clone_to(root)
+                t = VersionedParquetTable(root)
+                run(t, mode)
+                tables[mode] = t
+            inline, prepared = tables["inline"], tables["prepared"]
+            v = prepared.current_version()
+            assert v == inline.current_version(), case
+            assert _rows(spark, inline) == _rows(spark, prepared), case
+            assert _entry_stats(inline, v) == _entry_stats(prepared, v), case
+            # prepared placement: the new data files live under _staged/
+            new = [
+                e
+                for e in prepared.manifest(v)["files"]
+                if e["path"].startswith(_STAGED)
+            ]
+            assert new, case
+            for e in new:
+                assert os.path.exists(os.path.join(prepared.root, e["path"]))
+                assert bool(e.get("bloom")) == (case == "bloom"), case
+        # the DV commit deleted two rows in both modes
+        assert VersionedParquetTable(
+            str(tmp_path / "mor_dv" / "prepared")
+        ).read(spark).count() == 2_000
 
     def test_pruned_merge_places_data_in_staging(self, spark, tmp_path):
         """The pruned MERGE (CoW) now prepares outside the lock: its
@@ -423,3 +499,80 @@ class TestStagedLifecycle:
         got = dict(_rows(spark, t))
         assert got[7] == 777 and got[14] == 888
         assert t.read(spark).count() == 2_000
+
+
+def _base_rows(spark, n=20_000):
+    return spark.range(n).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 1.0).alias("price"),
+        F.lit("base").alias("status"),
+    )
+
+
+def _merge_shape(rows, **kw):
+    def run(spark, root):
+        src = spark.createDataFrame(
+            rows, "k long, price double, status string"
+        )
+        merge_upsert_write_pruned(root, src, "k", vacuum_keep_last=None, **kw)
+
+    return run
+
+
+class TestCommitJobCounts:
+    """Spark jobs launched per commit shape, counted through a job
+    group and the status tracker.  The counts pin the commit path's
+    Spark work: a refactor of the write/publish phases must launch
+    exactly the jobs it launched before (one band write, one stats-free
+    publish, no count or re-read jobs creeping back in)."""
+
+    SHAPES = {
+        # the table's first commit: one clustered write, inline
+        "initial_inline": (None, 3),
+        # one touched band, no out-of-band inserts
+        "single_band": (_merge_shape([(5, 1.0, "u")]), 9),
+        # two distant bands (list-valued append_split)
+        "two_bands": (
+            _merge_shape([(5, 1.0, "u"), (19_990, 2.0, "u")]), 11
+        ),
+        # one band + a far-out insert (out-of-band append write)
+        "out_of_band_insert": (
+            _merge_shape([(5, 1.0, "u"), (10_000_000, 3.0, "i")]), 11
+        ),
+        # merge-on-read: appended images + a driver-side DV sidecar
+        "merge_on_read": (
+            _merge_shape(
+                [(i * 40, -1.0, "u") for i in range(500)], write_mode="mor"
+            ),
+            16,
+        ),
+        # metadata-shape commit: DV sidecar only, no data write
+        "delete_where": (
+            lambda spark, root: VersionedParquetTable(root).delete_where(
+                spark, "k >= 100 and k < 140"
+            ),
+            1,
+        ),
+    }
+
+    @pytest.mark.parametrize("shape", list(SHAPES))
+    def test_jobs_per_commit_shape(self, spark, tmp_path, shape):
+        run, expected = self.SHAPES[shape]
+        root = str(tmp_path / shape)
+        sc = spark.sparkContext
+        group = f"commit-jobs-{shape}"
+        if run is not None:
+            VersionedParquetTable(root).commit_with_manifest(
+                _base_rows(spark), "k", cluster_partitions=8
+            )
+        sc.setJobGroup(group, shape)
+        try:
+            if run is None:
+                VersionedParquetTable(root).commit_with_manifest(
+                    _base_rows(spark), "k", cluster_partitions=8
+                )
+            else:
+                run(spark, root)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected

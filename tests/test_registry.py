@@ -168,6 +168,9 @@ def test_layout_cache_rechunks_coarse_row_groups(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(registry, "_LAYOUT_MIN_ROWS", 10)
     monkeypatch.setattr(registry, "_ROWS_PER_PARTITION", 20)
     monkeypatch.setattr(registry, "LAYOUT_CACHE_DIR", str(tmp_path / "cache"))
+    # the re-chunk target is capped by SPARK_GRAFT_CPUS: pin 32 cores so
+    # "coarse" (4 groups) and "fine" (~32 groups) mean the same on any host
+    monkeypatch.setattr(registry, "_DEFAULT_CPUS", "32")
 
     values = list(range(2000))
     coarse = str(tmp_path / "coarse.parquet")

@@ -8,8 +8,10 @@ Builds a range-clustered versioned target (N rows, ~120 B/row payload,
              incremental design point)
 * scattered — keys spread uniformly across every file's range (the
              adversarial worst case: pruning can save nothing)
-* full-rewrite — the same narrow batch through merge_upsert_write
-             (the r5 shape) for the wall/bytes comparison
+* full-rewrite — the same narrow batch merged against the whole
+             table and committed as a plain full version
+             (``table.commit(merge_upsert(table.read(spark), ...))``)
+             for the wall/bytes comparison
 
 Usage: python tools/bench_pruned_merge.py [n_rows] [out_json]
 """
@@ -40,7 +42,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from airflow_embeddings_pipeline_spark.operators.merge import (
-        merge_upsert_write,
+        merge_upsert,
         merge_upsert_write_pruned,
     )
     from airflow_embeddings_pipeline_spark.session import get_spark
@@ -113,14 +115,12 @@ def main() -> int:
         }
     )
 
-    # ---- full-rewrite comparison (r5 shape) on the narrow batch
+    # ---- full-rewrite comparison on the narrow batch
     path_c = os.path.join(root, "full")
     t = build_target(path_c)
     tbytes = table_bytes(path_c)
     t0 = time.time()
-    v = merge_upsert_write(
-        path_c, narrow.unionAll(ins), "k", vacuum_keep_last=None
-    )
+    v = t.commit(merge_upsert(t.read(spark), narrow.unionAll(ins), "k"))
     wall = round(time.time() - t0, 2)
     vdir = os.path.join(path_c, f"v{v:08d}")
     results.append(
