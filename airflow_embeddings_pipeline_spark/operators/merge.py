@@ -710,11 +710,12 @@ def _pruned_merge_attempt(
         # length (one extra count job over a plan this branch computes
         # anyway).
         # the distinct-key shuffle of a >max_exact_keys batch is the
-        # dominant pruning cost and feeds FOUR actions: count,
-        # segment-envelope range join, per-file range join, and — on a
-        # CAS miss under the commit lock — range_join_conflict's
-        # rebase-scope test.  Persist ONCE and keep it through the
-        # commit (unpersisted in the finally around the commit below):
+        # dominant pruning cost and feeds FIVE actions: count,
+        # segment-envelope range join, per-file range join, the write
+        # layout's key sample, and — on a CAS miss under the commit
+        # lock — range_join_conflict's rebase-scope test.  Persist ONCE
+        # and keep it through the commit (unpersisted in the finally
+        # around the commit below):
         # unpersisting earlier would re-evaluate a possibly
         # non-deterministic source under the lock, judging
         # disjointness against different keys than the prepared
@@ -955,56 +956,23 @@ def _pruned_merge_attempt(
             evolution_exclude=evolution_exclude,
             strategy="decompose",
         )
-        # layout hint: the merged subset clusters WITHIN the touched files'
-        # disjoint range COMPONENTS, and out-of-range inserts (keys beyond
-        # every touched range) get their own file(s) — so no output file's
-        # [min, max] spans a gap, neither between touched bands (a batch
-        # hitting two distant key regions must not mint a file covering
-        # both) nor between the touched region and the append region.
-        # Gap-spanning files intersect most carried files, inflating every
-        # later merge's touched set (measured by
-        # tools/stress_merge_longhorizon.py), and defeat the CDF source's
-        # intra-step range splitting.  Purely a layout decision: same rows,
-        # same manifest semantics.
-        ranged = sorted(
-            (
-                (e["min"], e["max"])
-                for e in touched_entries
-                if e["min"] is not None and e["max"] is not None
-            ),
-        )
-        bands: list[tuple] = []
-        for lo, hi in ranged:
-            if bands and lo <= bands[-1][1]:
-                bands[-1] = (bands[-1][0], max(bands[-1][1], hi))
-            else:
-                bands.append((lo, hi))
-        # bands are computed in the stats' canonical space (temporal keys
-        # store epoch-us ints); the commit's band predicates compare the
-        # ACTUAL key column, so restore typed bounds for append_split while
-        # band_rows below keeps comparing stats-to-stats
-        _lead_dt = schema[lead].dataType
-        typed_bands = [
-            (_stat_restore(lo, _lead_dt), _stat_restore(hi, _lead_dt))
-            for lo, hi in bands
-        ]
-        split = (
-            typed_bands
-            if len(typed_bands) > 1
-            else (typed_bands[0] if typed_bands else None)
-        )
-        # per-band row estimates from the manifest stats the prune already
-        # holds (each ranged touched file lies inside exactly one band):
-        # they size the commit's first band write so it needs no dedicated
-        # count job — exact counts ride that write's observed metrics
-        band_rows = [
-            sum(
-                e.get("n_rows") or 0
-                for e in touched_entries
-                if e["min"] is not None and lo <= e["min"] and e["max"] <= hi
+        # layout: one shuffle routes each merged row by range cut points
+        # (_layout_cuts) from data the prune already holds — the touched
+        # entries' stats, and the source keys: all of them on the exact
+        # tier, a bounded sample of the persisted distinct keys on the
+        # range-join tier
+        if pruning == "exact":
+            probe, scale = leads, 1.0
+        else:
+            frac = min(1.0, max(1000, max_exact_keys // 10) / n_src)
+            probe = sorted(
+                _stat_canon(r[0], schema[lead].dataType)
+                for r in src_keys.sample(fraction=frac, seed=0)
+                .select("k0")
+                .collect()
+                if r[0] is not None
             )
-            for lo, hi in bands
-        ]
+            scale = 1.0 / frac
         # the touched files' rows live on in the rewritten output, so
         # their entries are excluded outright
         version, bytes_rewritten = _publish_merge(
@@ -1013,8 +981,9 @@ def _pruned_merge_attempt(
             lead,
             prior_man,
             cluster_partitions=max(1, len(touched_entries)),
-            append_split=split,
-            band_rows_hint=band_rows if split is not None else None,
+            append_split=_layout_cuts(
+                touched_entries, probe, scale, schema[lead].dataType
+            ),
             stats_columns=keys if trail else None,
             key_columns=keys,
             base_version=base_version,
@@ -1041,6 +1010,88 @@ def _pruned_merge_attempt(
     finally:
         if pruning == "range-join":
             src_keys.unpersist()
+
+
+def _layout_cuts(touched: list, probe: list, scale: float, data_type):
+    """The pruned MERGE's ``append_split``: range cut points for its
+    one-shuffle write (``VersionedParquetTable._write_clustered_data``),
+    computed in the manifest stats' canonical space and restored to the
+    key's ``data_type``; None when no touched file has stats (the write
+    then range-clusters).
+
+    * The touched files' disjoint range COMPONENTS are bands, and every
+      band edge is a cut: no output file spans a gap, neither between
+      touched bands (a batch hitting two distant key regions must not
+      mint a file covering both) nor between a band and the inserts
+      beside it.  Gap-spanning files intersect most carried files,
+      inflating every later merge's touched set (measured by
+      tools/stress_merge_longhorizon.py), and defeat the CDF source's
+      intra-step range splitting.
+    * Output files aim at the touched files' mean row count.  Inside a
+      band the cuts are touched files' mins, taken where the manifest
+      rows below the cut (a file straddling it counts half) grew by
+      half a file since the band's last cut and leave half a file
+      above it.
+    * Outside every band, each gap's sorted ``probe`` keys (canonical
+      lead keys of the batch, each standing for ``scale`` keys) split
+      into equal runs of at most about one file each."""
+    import bisect
+    import itertools
+    import math
+
+    from ..sources.versioned import _stat_restore
+
+    ranged = sorted(
+        (e["min"], e["max"], e.get("n_rows") or 0)
+        for e in touched
+        if e["min"] is not None and e["max"] is not None
+    )
+    if not ranged:
+        return None
+    bands: list[list] = []
+    for lo, hi, _ in ranged:
+        if bands and lo <= bands[-1][1]:
+            bands[-1][1] = max(bands[-1][1], hi)
+        else:
+            bands.append([lo, hi])
+    per_file = max(1.0, sum(r[2] for r in ranged) / len(ranged))
+    mins = [r[0] for r in ranged]
+    by_max = sorted((r[1], r[2]) for r in ranged)
+    maxs = [m for m, _ in by_max]
+    cum_min = [0, *itertools.accumulate(r[2] for r in ranged)]
+    cum_max = [0, *itertools.accumulate(n for _, n in by_max)]
+
+    def below(c):
+        return (
+            cum_min[bisect.bisect_left(mins, c)]
+            + cum_max[bisect.bisect_left(maxs, c)]
+        ) / 2
+
+    cuts = []
+    for lo, hi in bands:
+        j, k = bisect.bisect_right(mins, lo), bisect.bisect_right(mins, hi)
+        last, top = below(lo), cum_min[k]
+        for c in mins[j:k]:
+            b = below(c)
+            if b - last >= per_file / 2 and top - b >= per_file / 2:
+                cuts.append(c)
+                last = b
+    los = [b[0] for b in bands]
+
+    def gap(v):
+        j = bisect.bisect_right(los, v) - 1
+        return None if j >= 0 and v <= bands[j][1] else j
+
+    step = per_file / scale
+    for g, run in itertools.groupby(probe, gap):
+        if g is not None:
+            run = list(run)
+            parts = max(1, math.ceil(len(run) / step))
+            cuts += [run[len(run) * i // parts] for i in range(1, parts)]
+    return [
+        (_stat_restore(lo, data_type), _stat_restore(hi, data_type))
+        for lo, hi in bands
+    ] + [_stat_restore(c, data_type) for c in cuts]
 
 
 def _publish_merge(
@@ -1240,10 +1291,10 @@ def _mor_merge_attempt(
         # mass).  MoR appends are BATCH-scale by construction — a
         # scattered batch's single appended file may span many bands,
         # but reading it costs O(batch), and maintain()'s
-        # compact/recluster folds the accumulation.  Banding a 2k-row
-        # append into 32 per-band files costs 32 write jobs and 32
-        # mini-files per commit (measured in
-        # tools/stress_dv_amplification.py before this choice).
+        # compact/recluster folds the accumulation.  Banding would cost
+        # no extra job (the band-split write is one shuffle), but it
+        # would cut a 2k-row append into one mini-file per touched band
+        # (32 in tools/stress_dv_amplification.py) on every commit.
         #
         # The touched entries stay carried, re-pointed at the new DV
         # sidecar.  Merge-on-read always prepares lock-free: the retry

@@ -3239,144 +3239,74 @@ class VersionedParquetTable:
         n_out: int,
         *,
         append_split=None,
-        band_rows_hint=None,
         cluster_by=None,
     ) -> None:
-        """The commit's DATA-file write: range-clustered on ``key``
-        (or ``cluster_by``), band-split per ``append_split`` so no
-        output file's [min, max] spans a gap between touched key
-        regions.  Pure data placement, run by :meth:`_write_phase`
-        (the write's output is version-independent)."""
+        """The commit's DATA-file write: one shuffle, one sort within
+        partitions, one parquet write.  Pure data placement, run by
+        :meth:`_write_phase` (the write's output is version-independent).
+
+        Without ``append_split`` the rows range-cluster on ``key`` (or
+        ``cluster_by``) into ``n_out`` files.  With it, each row's
+        output partition is the number of cut points its key has passed
+        (see :meth:`commit_with_manifest`): a bare value ``v`` is the cut
+        ``key >= v``, a band ``(lo, hi)`` the two cuts ``key >= lo`` and
+        ``key > hi``, so no output file's [min, max] spans a band edge.
+        The id is a balanced comparison tree over the sorted cuts
+        (O(log cuts) per row) and ``repartitionById`` routes each row
+        straight to its partition: no sampling job, no per-band query.
+        A NULL key passes no cut (lowest partition, where the CDF reader
+        expects it).  Empty partitions write no file, and the zero-row
+        file an empty write leaves is dropped by ``scan_file_stats``."""
         from pyspark.sql import functions as F
 
-        def _clustered(sub: DataFrame, parts: int) -> DataFrame:
-            # range clustering; a single output partition needs no
-            # range bounds, and repartitionByRange would still run
-            # its sampling JOB to compute them — repartition(1) +
-            # sort is row-identical and sampling-free (the narrow
-            # daily-batch commit writes exactly one file, so this
-            # saves a job on the common path)
-            cexpr = cluster_by if cluster_by is not None else F.col(key)
-            if parts == 1:
-                return sub.repartition(1).sortWithinPartitions(cexpr)
-            return sub.repartitionByRange(
-                parts, cexpr
-            ).sortWithinPartitions(cexpr)
-
         if append_split is None:
-            _clustered(df, n_out).write.mode("overwrite").parquet(outdir)
-            return
-        # one band (lo, hi) or a LIST of disjoint bands: rows of
-        # each band cluster into their OWN files so no output
-        # file's [min, max] spans a gap between bands — a merge
-        # touching two distant key regions must not mint a
-        # gap-spanning file (it would intersect most carried
-        # files, inflating every later merge's touched set, and
-        # it defeats the CDF's intra-step range splitting)
-        bands = (
-            [append_split]
-            if not isinstance(append_split, list)
-            else list(append_split)
-        )
-        in_band = [
-            (F.col(key) >= F.lit(lo)) & (F.col(key) <= F.lit(hi))
-            for lo, hi in bands
-        ]
-        any_band = functools.reduce(operator.or_, in_band)
-        # Per-band row counts WITHOUT a dedicated count job: the
-        # caller's manifest-stats hint sizes the FIRST band
-        # write, and exact counts ride that write's observed
-        # metrics (the persisted upstream materializes fully on
-        # its first action, so CollectMetrics sees every row
-        # exactly once) — later bands and the out-of-band append
-        # size from the exact counts.  This folds what used to
-        # be a separate aggregate job per commit into the first
-        # write's own execution.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        df = df.observe(
-            obs,
-            *[
-                F.sum(F.when(c, 1).otherwise(0)).alias(f"b{i}")
-                for i, c in enumerate(in_band)
-            ],
-            F.count(F.lit(1)).alias("all"),
-        ).persist()
-        try:
-            hints = list(band_rows_hint or [])
-            hints += [None] * (len(bands) - len(hints))
-            h_tot = sum(h for h in hints if h)
-            counts = None
-            n_in = 0
-            wrote = False
-            # the FIRST write both sizes from the hint and
-            # surfaces the observed counts — give that role to
-            # the band the hint says is biggest, so a
-            # hinted-empty band never burns the blind first
-            # write (its zero-row output would be dropped by
-            # scan_file_stats, but the job itself still costs)
-            order = sorted(
-                range(len(bands)),
-                key=lambda i: -(hints[i] or 0),
+            cexpr = cluster_by if cluster_by is not None else F.col(key)
+            # a single output partition needs no range bounds, and
+            # repartitionByRange would still run its sampling JOB
+            out = (
+                df.repartition(1)
+                if n_out == 1
+                else df.repartitionByRange(n_out, cexpr)
             )
-            for i in order:
-                cond = in_band[i]
-                if counts is None:
-                    # first write: partitions proportional to the
-                    # hinted share (touched-file rows from the
-                    # manifest), evenly split when unhinted
-                    parts = (
-                        max(1, round(n_out * hints[i] / h_tot))
-                        if h_tot and hints[i]
-                        else max(1, n_out // len(bands))
-                    )
-                else:
-                    n_b = counts[f"b{i}"] or 0
-                    if not n_b:
-                        continue
-                    # partitions proportional to the band's share
-                    parts = max(1, round(n_out * n_b / max(1, n_in)))
-                (
-                    _clustered(df.filter(cond), parts)
-                    .write.mode("append" if wrote else "overwrite")
-                    .parquet(outdir)
+            out.sortWithinPartitions(cexpr).write.mode("overwrite").parquet(
+                outdir
+            )
+            return
+        # (value, strict): the lower edge (v, False) sorts just below v,
+        # the upper edge (v, True) just above it
+        cuts = sorted(
+            {
+                c
+                for s in (
+                    append_split
+                    if isinstance(append_split, list)
+                    else [append_split]
                 )
-                wrote = True
-                if counts is None:
-                    counts = obs.get
-                    n_in = sum(
-                        counts[f"b{i}"] or 0 for i in range(len(bands))
-                    )
-            n_out_rows = (counts["all"] or 0) - n_in
-            if n_out_rows:
-                # appends cluster into files sized like the
-                # in-band ones
-                per_part = max(1, n_in // n_out) if n_in else n_out_rows
-                parts = max(1, -(-n_out_rows // per_part))
-                # NULL-key rows: every band predicate is NULL for
-                # them, so a bare ~any_band (NULL) would silently
-                # drop them from the write — coalesce to False so
-                # they route into this out-of-band append, where
-                # repartitionByRange's NULLS FIRST ordering
-                # clusters them into the lowest-range file (the
-                # same place the CDF reader expects them)
-                (
-                    _clustered(
-                        df.filter(~F.coalesce(any_band, F.lit(False))),
-                        parts,
-                    )
-                    .write.mode("append" if wrote else "overwrite")
-                    .parquet(outdir)
+                for c in (
+                    [(s[0], False), (s[1], True)]
+                    if isinstance(s, tuple)
+                    else [(s, False)]
                 )
-                wrote = True
-            if not wrote:
-                # fully-empty merged subset (e.g. a delete-only
-                # batch emptied the touched files): the version
-                # dir must still exist to carry the manifest
-                df.limit(0).write.mode("overwrite").parquet(outdir)
-        finally:
-            df.unpersist()
+            }
+        )
+        k = F.col(key)
+
+        def _pid(i: int, j: int):
+            # rows here have passed cuts[:i] and none of cuts[j:]
+            if i == j:
+                return F.lit(i)
+            m = (i + j) // 2
+            v, strict = cuts[m]
+            return F.when(
+                k > F.lit(v) if strict else k >= F.lit(v), _pid(m + 1, j)
+            ).otherwise(_pid(i, m))
+
+        (
+            df.repartitionById(len(cuts) + 1, _pid(0, len(cuts)))
+            .sortWithinPartitions(k)
+            .write.mode("overwrite")
+            .parquet(outdir)
+        )
 
     def _enforce_constraints(
         self, spark, constraints: dict, new_entries: list,
@@ -3438,7 +3368,6 @@ class VersionedParquetTable:
         base_version: int | None = None,
         cluster_partitions: int | None = None,
         append_split=None,
-        band_rows_hint=None,
         stats_columns=None,
         key_columns=None,
         column_mapping=None,
@@ -3504,7 +3433,6 @@ class VersionedParquetTable:
             version_hint=(base_version or 0) + 1,
             cluster_partitions=cluster_partitions,
             append_split=append_split,
-            band_rows_hint=band_rows_hint,
             stats_columns=stats_columns,
             key_columns=key_columns,
             column_mapping=column_mapping,
@@ -3530,7 +3458,6 @@ class VersionedParquetTable:
         version_hint: int,
         cluster_partitions: int | None = None,
         append_split=None,
-        band_rows_hint=None,
         cluster_by=None,
         entry_flags: dict | None = None,
         dv_updates: dict | None = None,
@@ -3582,7 +3509,6 @@ class VersionedParquetTable:
                     meta["key"],
                     n_out,
                     append_split=append_split,
-                    band_rows_hint=band_rows_hint,
                     cluster_by=cluster_by,
                 )
                 extras = tuple(
@@ -3678,8 +3604,7 @@ class VersionedParquetTable:
         carried_touched: dict | None = None,
         carried_exclude: dict | None = None,
         cluster_partitions: int | None = None,
-        append_split: tuple | None = None,
-        band_rows_hint: list | tuple | None = None,
+        append_split: tuple | list | None = None,
         stats_columns: list | tuple | None = None,
         key_columns: list | tuple | None = None,
         app_metadata: dict | None = None,
@@ -3717,24 +3642,23 @@ class VersionedParquetTable:
         and near-disjoint — that clustering is what makes the NEXT
         pruned merge's touched set small.
 
-        ``append_split=(lo, hi)`` — layout hint from the pruned MERGE:
-        rows with ``key`` OUTSIDE [lo, hi] (the out-of-range inserts of
-        an incremental batch) are written as their OWN range-clustered
-        file(s) instead of being folded into the in-range clusters.
-        Without the split, repartitionByRange's sampled quantiles put
-        the tail of the touched region and the (few, far-away) inserts
-        into ONE file whose [min, max] spans the gap — a wide range
-        that intersects most carried files and inflates every later
-        merge's touched set (the long-horizon probe measured
-        overlap_max ≈ 25 of 32 files without the split).  Purely a
-        layout decision: same rows, same manifest semantics.
-
-        ``band_rows_hint`` — optional per-band estimated row counts
-        (aligned with ``append_split`` when it is a list), typically
-        the summed manifest ``n_rows`` of the touched files in each
-        band: it sizes the FIRST band write so no dedicated count job
-        runs; exact counts ride that write's observed metrics and size
-        everything after.
+        ``append_split`` — layout from the pruned MERGE: a list of
+        range cut points on ``key`` (a single ``(lo, hi)`` band may be
+        passed bare).  A band ``(lo, hi)`` — a disjoint range component
+        of the merge's touched files — is two cuts, ``key >= lo`` and
+        ``key > hi``; a bare value ``v`` is the cut ``key >= v``.  Rows
+        between two neighbouring cuts form one output partition, so the
+        out-of-range inserts of an incremental batch never share a file
+        with a band, and inserts in different gaps never share one
+        either.  Without band edges, range clustering would put the
+        tail of the touched region and the (few, far-away) inserts into
+        ONE file whose [min, max] spans the gap — a wide range that
+        intersects most carried files and inflates every later merge's
+        touched set (the long-horizon probe measured overlap_max ≈ 25
+        of 32 files without the split).  The bare cuts size the files;
+        ``cluster_partitions`` is unused.  The whole write is one
+        shuffle (``repartitionById``) whatever the number of cuts.
+        Purely a layout decision: same rows, same manifest semantics.
 
         ``stats_columns`` — additional columns whose per-file [min, max]
         are recorded in the manifest next to the clustering key's (the
@@ -4033,7 +3957,6 @@ class VersionedParquetTable:
                 version_hint=next_v,
                 cluster_partitions=cluster_partitions,
                 append_split=append_split,
-                band_rows_hint=band_rows_hint,
                 stats_columns=stats_columns,
                 key_columns=key_columns,
                 column_mapping=column_mapping,

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest sits in, not any other copy on the path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -895,37 +895,111 @@ def test_pruned_merge_append_split_keeps_ranges_disjoint(spark, tmp_path):
     [min, max] may span the gap between the touched region and the
     append region, and no file range may overlap any other — the
     layout invariant that keeps the touched-set of every LATER merge
-    minimal (long-horizon probe: overlap 0 across 60 cycles)."""
+    minimal (long-horizon probe: overlap 0 across 60 cycles).
+
+    Inputs: a far insert run beside one band; inserts below the first
+    and above the last of two bands (they must not share a file, and
+    no file's [min, max] may contain a band edge); a band of
+    OVERLAPPING touched files big enough for several output files
+    (they come out disjoint); and the range-join tier on the
+    two-band input.  Every input reads back equal to the full
+    relational MERGE."""
     from airflow_embeddings_pipeline_spark.operators.merge import (
+        merge_upsert,
         merge_upsert_write_pruned,
     )
 
-    path, table = _pruned_setup(spark, tmp_path)
-    source = spark.createDataFrame(
-        [(0, "upd", "n")]
-        + [(100_000 + i, f"ins-{i}", "n") for i in range(50)],
-        "k long, ref string, cat string",
-    )
-    stats = merge_upsert_write_pruned(path, source, "k", vacuum_keep_last=None)
-    assert stats["files_touched"] == 1
-    man = table.manifest(table.current_version())
-    ranges = sorted(
-        (e["min"], e["max"]) for e in man["files"] if e["min"] is not None
-    )
-    assert len(ranges) == len(man["files"])  # all files carry stats
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, f"overlapping file ranges ({lo1},{hi1}) ({lo2},{hi2})"
-    # the insert file is separate: some file starts at the insert base
-    assert any(lo == 100_000 for lo, _ in ranges)
+    def _overlapping(path, table):
+        # base files [0, 48], [50, 98], … plus one carried file of odd
+        # keys [1, 99] overlapping the first two
+        odd = spark.range(50).select(
+            (F.col("id") * 2 + 1).alias("k"),
+            F.concat(F.lit("odd-"), F.col("id")).alias("ref"),
+            F.lit("old").alias("cat"),
+        )
+        table.commit_with_manifest(
+            odd,
+            "k",
+            carried=table.manifest(table.current_version())["files"],
+            cluster_partitions=1,
+        )
+
+    two_bands = [(100, "upd", "n"), (300, "upd", "n"), (-50, "lo", "n"),
+                 (100_000, "hi", "n")]
+    cases = [
+        # (name, extra setup, source rows, files touched, merge kwargs)
+        ("far_inserts",
+         None,
+         [(0, "upd", "n")]
+         + [(100_000 + i, f"ins-{i}", "n") for i in range(50)],
+         1, {}),
+        ("inserts_beside_bands", None, two_bands, 2, {}),
+        ("overlapping_band", _overlapping,
+         [(10, "upd", "n"), (60, "upd", "n")], 3, {}),
+        ("range_join", None, two_bands, 2, {"max_exact_keys": 1}),
+    ]
+    for name, setup, rows, n_touched, kw in cases:
+        path, table = _pruned_setup(spark, tmp_path / name)
+        if setup is not None:
+            setup(path, table)
+        base = {
+            e["path"]: e
+            for e in table.manifest(table.current_version())["files"]
+        }
+        source = spark.createDataFrame(
+            rows, "k long, ref string, cat string"
+        )
+        expect = sorted(
+            map(tuple, merge_upsert(table.read(spark), source, "k").collect())
+        )
+        stats = merge_upsert_write_pruned(
+            path, source, "k", vacuum_keep_last=None, **kw
+        )
+        assert stats["files_touched"] == n_touched, name
+        assert sorted(map(tuple, table.read(spark).collect())) == expect, name
+        man = table.manifest(table.current_version())
+        ranges = sorted(
+            (e["min"], e["max"]) for e in man["files"] if e["min"] is not None
+        )
+        assert len(ranges) == len(man["files"])  # all files carry stats
+        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
+            assert hi1 < lo2, (
+                f"{name}: overlapping file ranges ({lo1},{hi1}) ({lo2},{hi2})"
+            )
+        touched = sorted(
+            (e["min"], e["max"])
+            for p, e in base.items()
+            if p not in {f["path"] for f in man["files"]}
+        )
+        bands = []
+        for lo, hi in touched:
+            if bands and lo <= bands[-1][1]:
+                bands[-1][1] = max(bands[-1][1], hi)
+            else:
+                bands.append([lo, hi])
+        new = [(e["min"], e["max"]) for e in man["files"]
+               if e["path"] not in base]
+        for lo, hi in bands:
+            assert not any(a < lo <= b or a <= hi < b for a, b in new), (
+                f"{name}: a new file spans the edge of band ({lo}, {hi})"
+            )
+        if name == "far_inserts":
+            # the insert file is separate: some file starts at the base
+            assert any(lo == 100_000 for lo, _ in ranges)
+        elif name == "overlapping_band":
+            assert sum(1 for a, b in new if 0 <= a and b <= 99) >= 2
+        else:
+            # the insert below the first band and the one above the
+            # last never share a file
+            assert (-50, -50) in new and (100_000, 100_000) in new, name
 
 
 def test_band_split_empty_hinted_band_leaves_clean_manifest(spark, tmp_path):
-    """A band whose hint says EMPTY must not poison the commit: the
-    write order puts the biggest-hinted band first (so the blind,
-    hint-sized first write is never spent on a hinted-empty band), and
-    any zero-row files an actually-empty band produces are dropped by
-    scan_file_stats — the manifest carries no null-stats entry for
-    later merges to conservatively touch."""
+    """An EMPTY band must not poison the commit: the band-split write
+    gives the band its own (empty) output partition, and any zero-row
+    file the write produces is dropped by scan_file_stats — the
+    manifest carries no null-stats entry for later merges to
+    conservatively touch."""
     from airflow_embeddings_pipeline_spark.sources.versioned import (
         VersionedParquetTable,
     )
@@ -933,8 +1007,8 @@ def test_band_split_empty_hinted_band_leaves_clean_manifest(spark, tmp_path):
     root = str(tmp_path / "t")
     t = VersionedParquetTable(root)
     df = spark.range(1_000).selectExpr("id as k", "concat('v', id) as s")
-    # two bands: [0, 499] genuinely empty, [500, 999] holds every row;
-    # the hint marks the first band empty — plus out-of-band appends
+    # two bands: [0, 499] genuinely empty, [500, 999] holds every row
+    # — plus out-of-band appends
     df2 = df.filter("k >= 500").union(
         spark.range(5).selectExpr("id + 10000 as k", "'oob' as s")
     )
@@ -942,7 +1016,6 @@ def test_band_split_empty_hinted_band_leaves_clean_manifest(spark, tmp_path):
         df2,
         "k",
         append_split=[(0, 499), (500, 999)],
-        band_rows_hint=[0, 500],
         cluster_partitions=4,
     )
     man = t.manifest(t.current_version())
@@ -960,13 +1033,10 @@ def test_band_split_empty_hinted_band_leaves_clean_manifest(spark, tmp_path):
 def test_pruned_merge_null_key_insert_survives_append_split(spark, tmp_path):
     """A NULL-key source row must INSERT (SQL equality never matches
     NULL — the merge docstring's contract), including on the pruned
-    path where the commit splits the write by band predicates: every
-    band predicate evaluates to NULL for a NULL key, so a bare
-    ``~any_band`` filter would silently drop the row from all writes.
-    Regression for the coalesce(any_band, False) routing: the NULL-key
-    row lands in the out-of-band append, clustered NULLS FIRST into
-    the lowest-range file, and the read-back equals the full
-    relational MERGE."""
+    path where the commit splits the write at range cut points: every
+    cut comparison is NULL for a NULL key, and the row must still be
+    written — it passes no cut and lands in the lowest partition — and
+    the read-back equals the full relational MERGE."""
     from airflow_embeddings_pipeline_spark.operators.merge import (
         merge_upsert,
         merge_upsert_write_pruned,

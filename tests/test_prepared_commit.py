@@ -523,21 +523,37 @@ class TestCommitJobCounts:
     """Spark jobs launched per commit shape, counted through a job
     group and the status tracker.  The counts pin the commit path's
     Spark work: a refactor of the write/publish phases must launch
-    exactly the jobs it launched before (one band write, one stats-free
-    publish, no count or re-read jobs creeping back in)."""
+    exactly the jobs it launched before (one band-split write whatever
+    the number of bands, one stats-free publish, no count or re-read
+    jobs creeping back in)."""
 
     SHAPES = {
         # the table's first commit: one clustered write, inline
         "initial_inline": (None, 3),
         # one touched band, no out-of-band inserts
-        "single_band": (_merge_shape([(5, 1.0, "u")]), 9),
+        "single_band": (_merge_shape([(5, 1.0, "u")]), 8),
         # two distant bands (list-valued append_split)
         "two_bands": (
-            _merge_shape([(5, 1.0, "u"), (19_990, 2.0, "u")]), 11
+            _merge_shape([(5, 1.0, "u"), (19_990, 2.0, "u")]), 8
         ),
         # one band + a far-out insert (out-of-band append write)
         "out_of_band_insert": (
-            _merge_shape([(5, 1.0, "u"), (10_000_000, 3.0, "i")]), 11
+            _merge_shape([(5, 1.0, "u"), (10_000_000, 3.0, "i")]), 8
+        ),
+        # three bands + inserts in two gaps (below the first band,
+        # above the last): the band-split write is one shuffle, so its
+        # job count does not grow with bands or gaps
+        "three_bands_two_gaps": (
+            _merge_shape(
+                [
+                    (-5, 4.0, "i"),
+                    (5, 1.0, "u"),
+                    (10_000, 1.5, "u"),
+                    (19_990, 2.0, "u"),
+                    (10_000_000, 3.0, "i"),
+                ]
+            ),
+            8,
         ),
         # merge-on-read: appended images + a driver-side DV sidecar
         "merge_on_read": (
