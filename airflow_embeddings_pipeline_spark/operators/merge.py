@@ -377,50 +377,69 @@ def merge_upsert_write_pruned(
     key-idempotent, so recomputing against the newer snapshot yields
     exactly the state a serial execution would; with retries exhausted
     the conflict propagates to the caller.
+
+    ``source`` is evaluated ONCE for the whole call: it is persisted on
+    entry and unpersisted on exit, so the key prune, the NULL-key
+    probe, both merge legs (or the merge-on-read plan) and every
+    conflict retry read the same rows — a batch whose input moves
+    mid-merge cannot be pruned on one key set and written from another.
+    A source the caller already cached is read as is and left cached.
     """
+    from pyspark.storagelevel import StorageLevel
+
     from ..sources.versioned import SnapshotConflictError
 
     if write_mode not in ("cow", "mor"):
         raise ValueError(f"unknown write_mode: {write_mode!r}")
     root_key = os.path.abspath(target_path)
+    # a lost cache block is recomputed, the same guarantee the
+    # incremental pipeline's slice persist relies on
+    owned = source.storageLevel == StorageLevel.NONE
+    if owned:
+        source.persist()
     attempt = 0
-    while True:
-        # adaptive optimism: first attempts PREPARE outside the lock
-        # (parallel writers' data jobs overlap — the disjoint-scope
-        # win), unless recent conflicts on this table were dominated
-        # by genuine recomputes (a scattered storm, where a discarded
-        # staged write per conflict burns shared cluster time) or this
-        # call already recomputed once.  Retries and storms write
-        # under the lock, where the CAS aborts BEFORE the write job.
-        mode = (
-            "inline"
-            if attempt > 0 or _conflict_storming(root_key)
-            else "prepared"
-        )
-        try:
-            stats = _pruned_merge_attempt(
-                target_path,
-                source,
-                key,
-                update_columns=update_columns,
-                schema_evolution=schema_evolution,
-                delete_when=delete_when,
-                evolution_exclude=evolution_exclude,
-                app_metadata=app_metadata,
-                vacuum_keep_last=vacuum_keep_last,
-                max_exact_keys=max_exact_keys,
-                write_mode=write_mode,
-                max_dv_rows=max_dv_rows,
-                publish_mode=mode,
+    try:
+        while True:
+            # adaptive optimism: first attempts PREPARE outside the lock
+            # (parallel writers' data jobs overlap — the disjoint-scope
+            # win), unless recent conflicts on this table were dominated
+            # by genuine recomputes (a scattered storm, where a discarded
+            # staged write per conflict burns shared cluster time) or
+            # this call already recomputed once.  Retries and storms
+            # write under the lock, where the CAS aborts BEFORE the
+            # write job.
+            mode = (
+                "inline"
+                if attempt > 0 or _conflict_storming(root_key)
+                else "prepared"
             )
-            if stats.get("rebased"):
-                _conflict_note(root_key, "absorb")
-            return stats
-        except SnapshotConflictError:
-            _conflict_note(root_key, "recompute")
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
+            try:
+                stats = _pruned_merge_attempt(
+                    target_path,
+                    source,
+                    key,
+                    update_columns=update_columns,
+                    schema_evolution=schema_evolution,
+                    delete_when=delete_when,
+                    evolution_exclude=evolution_exclude,
+                    app_metadata=app_metadata,
+                    vacuum_keep_last=vacuum_keep_last,
+                    max_exact_keys=max_exact_keys,
+                    write_mode=write_mode,
+                    max_dv_rows=max_dv_rows,
+                    publish_mode=mode,
+                )
+                if stats.get("rebased"):
+                    _conflict_note(root_key, "absorb")
+                return stats
+            except SnapshotConflictError:
+                _conflict_note(root_key, "recompute")
+                if attempt >= conflict_retries:
+                    raise
+                attempt += 1
+    finally:
+        if owned:
+            source.unpersist()
 
 
 def _pruned_merge_attempt(
@@ -710,16 +729,15 @@ def _pruned_merge_attempt(
         # length (one extra count job over a plan this branch computes
         # anyway).
         # the distinct-key shuffle of a >max_exact_keys batch is the
-        # dominant pruning cost and feeds FIVE actions: count,
+        # dominant pruning cost and feeds up to five actions: count,
         # segment-envelope range join, per-file range join, the write
         # layout's key sample, and — on a CAS miss under the commit
-        # lock — range_join_conflict's rebase-scope test.  Persist ONCE
-        # and keep it through the commit (unpersisted in the finally
-        # around the commit below):
-        # unpersisting earlier would re-evaluate a possibly
-        # non-deterministic source under the lock, judging
-        # disjointness against different keys than the prepared
-        # output, and re-run the distinct shuffle while holding it.
+        # lock — range_join_conflict's rebase-scope test.  The source
+        # under it is already one persisted evaluation (see
+        # merge_upsert_write_pruned); this persist keeps the SHUFFLE
+        # from re-running for each action, under the lock included,
+        # and holds through the commit (unpersisted in the finally
+        # around the commit below).
         src_keys.persist()
         try:
             n_src = src_keys.count()
@@ -1390,6 +1408,11 @@ def apply_changes(
     to stay a replica (pass ``False`` to pin the replica's schema and
     ignore new columns instead).
 
+    The feed is evaluated ONCE: the applicable rows are persisted, the
+    row-count aggregate materializes them, and the merge reads that
+    cached frame (its own persist then stands aside), so the feed's
+    diff joins run once per call instead of once per merge read.
+
     Returns the pruned-merge stats dict plus ``rows_upserted`` /
     ``rows_deleted``; a change feed with no applicable rows commits
     nothing and returns ``{"version": None, ...}`` zeros.
@@ -1401,45 +1424,58 @@ def apply_changes(
             f"not a change feed: missing column(s) {sorted(missing)}"
         )
     payload = [c for c in changes.columns if c not in meta]
-    applicable = changes.filter(
-        F.col("_change_type").isin("insert", "update_postimage", "delete")
-    ).select(
-        *payload,
-        (F.col("_change_type") == "delete").alias("_cdc_delete"),
-        F.col("_commit_version"),
+    # ONE evaluation of the feed (its diff joins shuffle twice): the
+    # aggregate below materializes it, and the merge reads the same
+    # cached frame for its prune, both legs and any retry
+    applicable = (
+        changes.filter(
+            F.col("_change_type").isin("insert", "update_postimage", "delete")
+        )
+        .select(
+            *payload,
+            (F.col("_change_type") == "delete").alias("_cdc_delete"),
+            F.col("_commit_version"),
+        )
+        .persist()
     )
-    agg = applicable.agg(
-        F.sum(F.when(F.col("_cdc_delete"), 1).otherwise(0)).alias("n_del"),
-        F.count(F.lit(1)).alias("n_all"),
-        F.max("_commit_version").alias("v_src"),
-    ).collect()[0]
-    n_del = agg["n_del"] or 0
-    n_ups = (agg["n_all"] or 0) - n_del
-    if n_del + n_ups == 0:
-        return {
-            "version": None,
-            "rows_upserted": 0,
-            "rows_deleted": 0,
-            "files_touched": 0,
-            "bytes_rewritten": 0,
-        }
-    from ..sources.versioned import VersionedParquetTable
+    try:
+        agg = applicable.agg(
+            F.sum(F.when(F.col("_cdc_delete"), 1).otherwise(0)).alias("n_del"),
+            F.count(F.lit(1)).alias("n_all"),
+            F.max("_commit_version").alias("v_src"),
+        ).collect()[0]
+        n_del = agg["n_del"] or 0
+        n_ups = (agg["n_all"] or 0) - n_del
+        if n_del + n_ups == 0:
+            return {
+                "version": None,
+                "rows_upserted": 0,
+                "rows_deleted": 0,
+                "files_touched": 0,
+                "bytes_rewritten": 0,
+            }
+        from ..sources.versioned import VersionedParquetTable
 
-    prior = VersionedParquetTable(target_path).app_metadata_of().get(
-        "cdc_last_applied_version"
-    )
-    v_applied = agg["v_src"] if prior is None else max(prior, agg["v_src"])
-    stats = merge_upsert_write_pruned(
-        target_path,
-        applicable.drop("_commit_version"),
-        key,
-        schema_evolution=schema_evolution,
-        delete_when=F.col("s._cdc_delete"),
-        evolution_exclude=("_cdc_delete",),
-        app_metadata={"cdc_last_applied_version": v_applied},
-        vacuum_keep_last=vacuum_keep_last,
-        max_exact_keys=max_exact_keys,
-    )
+        prior = VersionedParquetTable(target_path).app_metadata_of().get(
+            "cdc_last_applied_version"
+        )
+        v_applied = agg["v_src"] if prior is None else max(prior, agg["v_src"])
+        # the control columns steer the merge and never land in the
+        # replica; excluding _commit_version (instead of dropping it)
+        # keeps the merge on the cached plan
+        stats = merge_upsert_write_pruned(
+            target_path,
+            applicable,
+            key,
+            schema_evolution=schema_evolution,
+            delete_when=F.col("s._cdc_delete"),
+            evolution_exclude=("_cdc_delete", "_commit_version"),
+            app_metadata={"cdc_last_applied_version": v_applied},
+            vacuum_keep_last=vacuum_keep_last,
+            max_exact_keys=max_exact_keys,
+        )
+    finally:
+        applicable.unpersist()
     return {
         **stats,
         "rows_upserted": n_ups,

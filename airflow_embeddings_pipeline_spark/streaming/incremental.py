@@ -205,28 +205,33 @@ class IncrementalPipeline:
             "__wm_key", "__wm_ts"
         )
 
-    def observed_watermarks(self, increment: DataFrame) -> dict[str, datetime]:
+    def observed_watermarks(
+        self, increment: DataFrame
+    ) -> tuple[dict[str, datetime], int]:
         """T3: max event time per key in this slice (A2 as partial/final
-        agg; ≤1 row per key reaches the driver)."""
+        agg; ≤1 row per key reaches the driver), and the slice's row
+        count from the same aggregate (per-key counts summed on the
+        driver)."""
         rows = (
             increment.groupBy(self.key_col)
-            .agg(F.max(self.ts_col).alias("wm"))
+            .agg(F.max(self.ts_col).alias("wm"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        return {str(r[self.key_col]): r["wm"] for r in rows if r["wm"] is not None}
+        wms = {str(r[self.key_col]): r["wm"] for r in rows if r["wm"] is not None}
+        return wms, sum(r["n"] for r in rows)
 
     def run(self, source: DataFrame) -> dict[str, int]:
         """Execute one batch: scan → transform → sink → advance state.
         Returns a small metrics dict (A4 analog of the reference's
         per-run metrics, embeddings-pipeline.py:397-432)."""
-        # Persist the slice for the run's duration: watermark agg, count
-        # and sink must all see the SAME scan — on a source that changes
-        # mid-run, re-evaluation could advance state past rows the sink
-        # never received (rows silently skipped on the next run).
+        # Persist the slice for the run's duration: the watermark agg
+        # (which also counts the rows) and the sink must see the SAME
+        # scan — on a source that changes mid-run, re-evaluation could
+        # advance state past rows the sink never received (rows
+        # silently skipped on the next run).
         increment = self.plan_incremental_scan(source).persist()
         try:
-            new_wms = self.observed_watermarks(increment)
-            n = increment.count()
+            new_wms, n = self.observed_watermarks(increment)
             if n > 0:  # P8 empty-input guard
                 self.sink(self.transform(increment))
             # T4: state advances only after the sink committed.

@@ -111,8 +111,9 @@ def test_no_forced_broadcast_on_scaling_relations(spark, sf_dir):
     query sets, fence tables, ingest batches) are whitelisted with
     reasons in hint_audit.BOUNDED_BY_DESIGN."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from hint_audit import audit_catalog
 
     bad = audit_catalog(spark, sf_dir)  # full catalog, both module trees

@@ -6,6 +6,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from airflow_embeddings_pipeline_spark.operators.merge import (
     merge_counts,
@@ -1637,6 +1638,84 @@ def test_sync_replica_unseeded_raises(spark, tmp_path):
     p_path, primary, r_path, replica = _cdc_primary_replica(spark, tmp_path)
     with pytest.raises(ValueError, match="no cdc_last_applied_version"):
         sync_replica(spark, p_path, r_path, "k")
+
+
+# ------------------------------------------------- one evaluation per input
+def _counted_key(spark):
+    """An identity Python UDF over the key column that counts the rows
+    it evaluates: every Spark action that re-evaluates the input adds
+    its row count again."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def ident(v):
+        acc.add(1)
+        return v
+
+    return acc, F.udf(ident, "long")
+
+
+def _merge_batch(spark):
+    """Updates of even keys, inserts inside file ranges (odd keys) and
+    one insert above every file."""
+    return spark.range(40).select(
+        (F.col("id") * 5).alias("k"),
+        F.concat(F.lit("new-"), F.col("id")).alias("ref"),
+        F.lit("new").alias("cat"),
+    ).union(
+        spark.createDataFrame(
+            [(100_000, "hi", "new")], "k long, ref string, cat string"
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "max_exact_keys", [200_000, 1], ids=["exact", "range_join"]
+)
+def test_pruned_merge_evaluates_source_once(spark, tmp_path, max_exact_keys):
+    """The pruned MERGE reads one persisted evaluation of its batch for
+    the key prune, both merge legs and the write — on the exact tier
+    and on the range-join tier — and reads back equal to the full
+    relational MERGE."""
+    path, table = _pruned_setup(spark, tmp_path)
+    full = merge_upsert(table.read(spark), _merge_batch(spark), "k")
+    expect = sorted(map(tuple, full.collect()))
+    acc, ident = _counted_key(spark)
+    source = _merge_batch(spark).withColumn("k", ident("k"))
+    stats = merge_upsert_write_pruned(
+        path, source, "k", vacuum_keep_last=None, max_exact_keys=max_exact_keys
+    )
+    assert stats["pruning"] == (
+        "exact" if max_exact_keys > 1 else "range-join"
+    )
+    assert 0 < stats["files_touched"] < stats["files_total"]
+    assert acc.value == 41
+    assert sorted(map(tuple, table.read(spark).collect())) == expect
+    assert source.storageLevel == StorageLevel.NONE  # released on return
+
+
+def test_apply_changes_evaluates_feed_once(spark, tmp_path):
+    """apply_changes materializes the applicable change feed once: its
+    row-count aggregate and the replica merge (prune, both legs, write)
+    read the same cached rows.  The replica reads back equal to the
+    full relational MERGE of the primary's batch."""
+    from airflow_embeddings_pipeline_spark.operators.merge import apply_changes
+
+    p_path, primary, r_path, replica = _cdc_primary_replica(spark, tmp_path)
+    batch, tomb = _merge_batch(spark), F.col("s.ref") == "new-2"
+    full = merge_upsert(primary.read(spark), batch, "k", delete_when=tomb)
+    expect = sorted(map(tuple, full.collect()))
+    merge_upsert_write_pruned(
+        p_path, batch, "k", delete_when=tomb, vacuum_keep_last=None
+    )
+    feed = primary.changes_since(spark, 1, key="k")
+    applicable = feed.filter(F.col("_change_type") != "update_preimage").count()
+    acc, ident = _counted_key(spark)
+    stats = apply_changes(
+        r_path, feed.withColumn("k", ident("k")), "k", vacuum_keep_last=None
+    )
+    assert stats["rows_upserted"] == 40 and stats["rows_deleted"] == 1
+    assert acc.value == applicable == 41
+    assert sorted(map(tuple, replica.read(spark).collect())) == expect
 
 
 # ---------------------------------------------------------------- CAS

@@ -509,14 +509,93 @@ def _base_rows(spark, n=20_000):
     )
 
 
-def _merge_shape(rows, **kw):
-    def run(spark, root):
-        src = spark.createDataFrame(
-            rows, "k long, price double, status string"
-        )
-        merge_upsert_write_pruned(root, src, "k", vacuum_keep_last=None, **kw)
+def _commit_base(spark, root):
+    VersionedParquetTable(root).commit_with_manifest(
+        _base_rows(spark), "k", cluster_partitions=8
+    )
 
-    return run
+
+def _merge_rows(spark, rows):
+    return spark.createDataFrame(rows, "k long, price double, status string")
+
+
+def _merge_shape(rows, **kw):
+    def setup(spark, root):
+        _commit_base(spark, root)
+        src = _merge_rows(spark, rows)
+        return lambda: merge_upsert_write_pruned(
+            root, src, "k", vacuum_keep_last=None, **kw
+        )
+
+    return setup
+
+
+def _delete_shape(spark, root):
+    _commit_base(spark, root)
+    return lambda: VersionedParquetTable(root).delete_where(
+        spark, "k >= 100 and k < 140"
+    )
+
+
+def _sync_shape(spark, root):
+    """A seeded replica one merge behind the primary; counted: the CDC
+    round that catches it up."""
+    from airflow_embeddings_pipeline_spark.operators.merge import sync_replica
+
+    _commit_base(spark, root)
+    primary, replica = VersionedParquetTable(root), f"{root}-replica"
+    VersionedParquetTable(replica).commit_with_manifest(
+        primary.read(spark),
+        "k",
+        cluster_partitions=8,
+        app_metadata={"cdc_last_applied_version": primary.current_version()},
+    )
+    merge_upsert_write_pruned(
+        root,
+        _merge_rows(spark, [(5, 1.0, "u"), (19_990, 2.0, "u"), (-5, 4.0, "i")]),
+        "k",
+        vacuum_keep_last=None,
+    )
+    return lambda: sync_replica(spark, root, replica, "k", vacuum_keep_last=None)
+
+
+def _incremental_shape(spark, root):
+    """A landed batch with in-batch duplicates; counted: one
+    IncrementalPipeline.run (watermark scan, newest row per key,
+    pruned-merge sink)."""
+    from airflow_embeddings_pipeline_spark.operators.dedup import latest_per_key
+    from airflow_embeddings_pipeline_spark.streaming.incremental import (
+        IncrementalPipeline,
+        WatermarkStore,
+    )
+
+    _commit_base(spark, root)
+    landing = f"{root}-landing"
+    rows = [
+        (k, float(t), "new", f"s{k % 3}", t)
+        for t in (1, 2)
+        for k in (5, 7, 19_990)
+    ]
+    (
+        spark.createDataFrame(
+            rows, "k long, price double, status string, src string, t long"
+        )
+        .withColumn("ts", F.timestamp_seconds("t"))
+        .drop("t")
+        .coalesce(1)
+        .write.parquet(landing)
+    )
+    pipe = IncrementalPipeline(
+        WatermarkStore(f"{root}-watermarks.json"),
+        key_col="src",
+        ts_col="ts",
+        transform=lambda df: latest_per_key(df, "k", "ts").drop("src", "ts"),
+        sink=lambda df: merge_upsert_write_pruned(
+            root, df, "k", vacuum_keep_last=None
+        ),
+    )
+    batch = spark.read.parquet(landing)
+    return lambda: pipe.run(batch)
 
 
 class TestCommitJobCounts:
@@ -524,21 +603,29 @@ class TestCommitJobCounts:
     group and the status tracker.  The counts pin the commit path's
     Spark work: a refactor of the write/publish phases must launch
     exactly the jobs it launched before (one band-split write whatever
-    the number of bands, one stats-free publish, no count or re-read
-    jobs creeping back in)."""
+    the number of bands, one stats-free publish, each input evaluated
+    once, no count or re-read jobs creeping back in).  Each shape's
+    set-up runs outside the group and returns the counted operation."""
 
     SHAPES = {
         # the table's first commit: one clustered write, inline
-        "initial_inline": (None, 3),
-        # one touched band, no out-of-band inserts
-        "single_band": (_merge_shape([(5, 1.0, "u")]), 8),
+        "initial_inline": (
+            lambda spark, root: lambda: _commit_base(spark, root),
+            3,
+        ),
+        # one touched band, no out-of-band inserts.  One job fewer than
+        # the other merges because the batch is ONE row: once the
+        # persisted batch is materialized, AQE's OptimizeOneRowPlan sees
+        # a one-row input and drops the key collect's distinct (its
+        # shuffle job goes too)
+        "single_band": (_merge_shape([(5, 1.0, "u")]), 6),
         # two distant bands (list-valued append_split)
         "two_bands": (
-            _merge_shape([(5, 1.0, "u"), (19_990, 2.0, "u")]), 8
+            _merge_shape([(5, 1.0, "u"), (19_990, 2.0, "u")]), 7
         ),
         # one band + a far-out insert (out-of-band append write)
         "out_of_band_insert": (
-            _merge_shape([(5, 1.0, "u"), (10_000_000, 3.0, "i")]), 8
+            _merge_shape([(5, 1.0, "u"), (10_000_000, 3.0, "i")]), 7
         ),
         # three bands + inserts in two gaps (below the first band,
         # above the last): the band-split write is one shuffle, so its
@@ -553,42 +640,32 @@ class TestCommitJobCounts:
                     (10_000_000, 3.0, "i"),
                 ]
             ),
-            8,
+            7,
         ),
         # merge-on-read: appended images + a driver-side DV sidecar
         "merge_on_read": (
             _merge_shape(
                 [(i * 40, -1.0, "u") for i in range(500)], write_mode="mor"
             ),
-            16,
+            15,
         ),
         # metadata-shape commit: DV sidecar only, no data write
-        "delete_where": (
-            lambda spark, root: VersionedParquetTable(root).delete_where(
-                spark, "k >= 100 and k < 140"
-            ),
-            1,
-        ),
+        "delete_where": (_delete_shape, 1),
+        # one CDC round: change feed, its aggregate, the replica merge
+        "sync_replica": (_sync_shape, 11),
+        # one incremental batch: watermark aggregate, the sink's merge
+        "incremental_run": (_incremental_shape, 10),
     }
 
     @pytest.mark.parametrize("shape", list(SHAPES))
     def test_jobs_per_commit_shape(self, spark, tmp_path, shape):
-        run, expected = self.SHAPES[shape]
-        root = str(tmp_path / shape)
+        setup, expected = self.SHAPES[shape]
+        op = setup(spark, str(tmp_path / shape))
         sc = spark.sparkContext
         group = f"commit-jobs-{shape}"
-        if run is not None:
-            VersionedParquetTable(root).commit_with_manifest(
-                _base_rows(spark), "k", cluster_partitions=8
-            )
         sc.setJobGroup(group, shape)
         try:
-            if run is None:
-                VersionedParquetTable(root).commit_with_manifest(
-                    _base_rows(spark), "k", cluster_partitions=8
-                )
-            else:
-                run(spark, root)
+            op()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected

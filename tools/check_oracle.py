@@ -9,11 +9,12 @@ order-insensitive values.  Use while iterating:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canonicalize(df) -> list[tuple]:

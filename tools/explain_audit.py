@@ -16,10 +16,11 @@ from __future__ import annotations
 
 import io
 import re
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -33,9 +33,10 @@ Usage: python tools/hint_audit.py [sf_dir]   (also used by pytest)
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # first column of each scaling table -> table name (analyzed-plan
 # Relation lines show columns, not file paths)

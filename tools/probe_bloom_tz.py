@@ -13,10 +13,11 @@ Run:  TZ=America/New_York python tools/probe_bloom_tz.py
 session cannot switch zones, hence a standalone probe)
 """
 import shutil
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -10,10 +10,11 @@ walls for the same predicate pair.
 import datetime
 import json
 import shutil
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F
 
 from airflow_embeddings_pipeline_spark.sources.versioned import (

@@ -10,11 +10,12 @@ Usage: python tools/probe_quad_split2.py [sf_dir] [--scale N]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench_vs_reference import parse_args, scale_corpus  # noqa: E402
 

@@ -1,6 +1,6 @@
 """REORG vs purge-then-compact rewrite-bytes comparison (r9)."""
-import sys, time, shutil
-sys.path.insert(0, "/root/repo")
+import os, sys, time, shutil
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from airflow_embeddings_pipeline_spark.sources.versioned import VersionedParquetTable
 

@@ -18,11 +18,13 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -113,7 +115,7 @@ def main() -> None:
             }
         )
     )
-    with open("/root/repo/plans/r12/SHJ_SKEW_PROBE_plan.txt", "w") as f:
+    with open(os.path.join(REPO, "plans/r12/SHJ_SKEW_PROBE_plan.txt"), "w") as f:
         f.write(final_plan)
 
     # Variant 2: the SMJ fallback path (local-map SHJ rewrite off) with
@@ -170,7 +172,7 @@ def main() -> None:
                 }
             )
         )
-        with open("/root/repo/plans/r12/SHJ_SKEW_PROBE_smjpath_plan.txt", "w") as f:
+        with open(os.path.join(REPO, "plans/r12/SHJ_SKEW_PROBE_smjpath_plan.txt"), "w") as f:
             f.write(plan2)
     finally:
         for k in spark2_conf:

@@ -45,8 +45,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench_vs_reference import parse_args  # noqa: E402
 from stress_ann_recall import stage_perturbed  # noqa: E402

@@ -30,7 +30,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def sidecar_bytes(root: str) -> int:

@@ -27,8 +27,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench_vs_reference import parse_args  # noqa: E402
 
